@@ -23,10 +23,6 @@ def sql_double(x: float) -> str:
     return repr(float(x)) + "D"
 
 
-def lit_double_array(vals: list[float]) -> Column:
-    return F.expr("array(" + ",".join(sql_double(x) for x in vals) + ")")
-
-
 def lit_double_matrix(rows: list[list[float]]) -> Column:
     return F.expr(
         "array("

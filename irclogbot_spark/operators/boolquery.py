@@ -1,7 +1,17 @@
-"""ES compound queries — ``bool`` (must/should/filter/must_not) and
-``dis_max`` (disjunction-max), the two compound types every ES
-deployment issues (SURVEY.md §2H; every Kibana search bar compiles
-to a bool query, every multi_match best_fields to a dis_max).
+"""ES compound queries — ``bool`` (must/should/filter/must_not),
+``dis_max``, ``boosting``, ``constant_score``, ``terms_set``,
+``function_score`` and bool with fuzzy clauses (SURVEY.md §2H; every
+Kibana search bar compiles to a bool query, every multi_match
+best_fields to a dis_max).
+
+Each query type is ONE function over either term source of
+operators/termsource.py: a corpus DataFrame (scan; ``text_col`` names
+its text column) or a loaded
+:class:`~irclogbot_spark.operators.textindex.TextIndex` (one-shot
+``read_text_index`` or streamed ``load_text``). The single-field
+term frame is the multi_match frame over one field; every gate and
+score below is written once against it, so both sources return
+identical rows.
 
 bool semantics (the ES contract, reproduced exactly):
 
@@ -12,66 +22,46 @@ bool semantics (the ES contract, reproduced exactly):
   ``minimum_should_match`` of them. Default: 0 when a must clause
   exists, 1 otherwise. DELIBERATE DEVIATION from ES: real ES also
   defaults msm to 0 when only a filter clause accompanies should,
-  admitting zero-scoring filter-only hits (score 0.0). This engine's
-  compound contract is that every returned doc has >= 1 scoring hit
-  (required for the scan/at-rest bit-identity — the at-rest pivot
-  only materializes docs with a postings hit), so with an empty
-  ``must`` the msm floor is 1 regardless of ``dl_between``, and an
-  explicit ``minimum_should_match <= 0`` with empty must raises
-  ValueError. ES's filter-only-match shape is served by
+  admitting zero-scoring filter-only hits. This engine's compound
+  contract is that every returned doc has >= 1 scoring hit (the
+  index source only materializes docs with a postings hit), so with
+  an empty ``must`` the msm floor is 1 regardless of ``dl_between``,
+  and an explicit ``minimum_should_match <= 0`` with empty must
+  raises ValueError. ES's filter-only-match shape is served by
   :func:`constant_score_search` instead.
-- ``filter``: non-scoring gate. Modeled as a token-length range
-  over the same dl the BM25 norm uses (the ES deployment shape is a
-  numeric/date range over a doc-values field; dl is the one numeric
-  field both the corpus scan AND the at-rest doclens table carry,
-  so both physical paths serve the identical clause).
-- ``must_not``: the doc must contain none of these terms;
-  contributes no score (ES executes it as a filter-context
-  exclusion).
+- ``filter``: non-scoring gate, modeled as a token-length range over
+  the same dl the BM25 norm uses (the one numeric field both the
+  corpus scan AND the index doclens table carry).
+- ``must_not``: the doc must contain none of these terms; no score
+  (the index source READS their postings, bucket-pruned, as an
+  in-pivot exclusion — the corpus text is never touched).
 - score = the per-term BM25 contributions of must + should terms
-  added IN DECLARATION ORDER (a tf=0 should term contributes exactly
-  0.0, so no conditional is needed — the gate conditions and the
-  score expression stay independent, the same fixed-order double
-  assembly as bm25_rank / bm25_scores_indexed keeps the two physical
-  paths and the DuckDB oracle bit-identical).
+  added IN DECLARATION ORDER (a tf=0 term contributes exactly 0.0,
+  so the gates and the score stay independent expressions — the
+  fixed-order double assembly bm25_rank uses keeps both sources and
+  the DuckDB oracle bit-identical).
 
-dis_max semantics: a doc matches when >= 1 clause term matches;
-score = max(per-term scores) + tie_breaker * (sum - max) — the
-best clause dominates, the others contribute at a discount (ES's
-exact formula; tie_breaker=0 is pure best-of, 1.0 degenerates to
-the bool should-sum). max/sum/discount use the identical expression
-tree in the DuckDB twin (GREATEST + the fixed-order sum), so the
-scores value-hash.
-
-Scale shape (both query types, both physical paths):
-
-- Scan form: one in-row projection computes per-doc dl + one tf per
-  referenced term (the token array materializes once); ONE global
-  aggregate produces the corpus-stats row (n, avgdl, per-term df)
-  and broadcasts back; the gates and the score are map-side
-  expressions; top-k is a partial TakeOrdered. Zero corpus shuffles.
-- At-rest form: ONE bucket-pruned postings probe covers all
-  referenced terms (literal crc32 bucket list -> PartitionFilters —
-  a bool must_not term's postings are READ, bucket-pruned, and used
-  as an in-pivot exclusion; the corpus text is never touched); one
-  doc-keyed pivot aggregation reassembles per-doc tf columns; dl
-  joins from the narrow doclens table; stats and df broadcast.
-  Exactly one corpus-hit-sized exchange.
+dis_max: a doc matches when >= 1 clause term matches; score =
+max(per-term scores) + tie_breaker * (sum - max) (ES's exact
+formula; GREATEST + the fixed-order sum in the DuckDB twin).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _per_term_score(tf, dfreq, n, avgdl, dl, k1: float, b: float):
-    """The repo-wide BM25 per-term expression (rational idf — see
-    bm25_rank's determinism note)."""
-    denom_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * dl / avgdl
-    idf = (n - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5))
-    tfc = (tf * (F.lit(k1) + F.lit(1.0))) / (tf + F.lit(k1) * denom_norm)
-    return idf * tfc
+from irclogbot_spark.operators.termsource import (
+    all_of,
+    any_of,
+    expand_terms,
+    fixed_sum,
+    hit,
+    per_term_score,
+    source,
+    tf,
+    top_k,
+)
 
 
 def parse_minimum_should_match(spec, n_should: int) -> int | None:
@@ -108,13 +98,11 @@ def parse_minimum_should_match(spec, n_should: int) -> int | None:
 def _resolve_msm(
     minimum_should_match, must: list[str], should: list[str]
 ) -> int:
-    """Resolve minimum_should_match per the module contract: every
-    returned doc needs >= 1 scoring hit, so with empty ``must`` the
-    floor is 1 (explicit msm <= 0 there is rejected — the deliberate
-    ES deviation documented in the module docstring; use
-    constant_score for filter-only matching). Accepts ES's value
-    syntax (int, "N", "N%", "-N%" — round 13,
-    :func:`parse_minimum_should_match`)."""
+    """Resolve minimum_should_match per the module contract: with
+    empty ``must`` the floor is 1 (explicit msm <= 0 there is
+    rejected — the deliberate ES deviation; use constant_score for
+    filter-only matching). Accepts ES's value syntax
+    (:func:`parse_minimum_should_match`)."""
     minimum_should_match = parse_minimum_should_match(
         minimum_should_match, len(should)
     )
@@ -122,173 +110,38 @@ def _resolve_msm(
         if not must and should and minimum_should_match <= 0:
             raise ValueError(
                 "minimum_should_match <= 0 with no must clause would "
-                "admit zero-scoring hits, which the at-rest index "
-                "cannot serve (scan/at-rest bit-identity); use "
+                "admit zero-scoring hits, which the index source "
+                "cannot serve (scan/index bit-identity); use "
                 "constant_score_search for filter-only matching"
             )
         return minimum_should_match
-    # default: should is optional when a must clause exists,
-    # required (>= 1) when should is the only scoring clause —
-    # including when a dl_between filter is present (the documented
-    # deviation from ES's filter-aware default)
     return 0 if must else (1 if should else 0)
 
 
-def _check_no_duplicate_terms(ref: list[str]) -> None:
-    """The at-rest path pivots on the referenced terms —
-    ``pivot('term', ref)`` with a repeated value yields ambiguous
-    duplicate columns and the reassembly select fails with an
-    AnalysisException while the scan form silently accepts the same
-    input. Reject duplicates at every public entry point so both
-    physical forms agree on the accepted input space."""
+def check_no_duplicate_terms(ref: list[str]) -> None:
+    """A term referenced twice would be one index pivot column for
+    two clauses; reject duplicates at every entry point so both
+    sources agree on the accepted input space."""
     seen: set[str] = set()
     dups: set[str] = set()
     for t in ref:
         (dups if t in seen else seen).add(t)
     if dups:
-        dups = sorted(dups)
         raise ValueError(
-            f"duplicate terms across clauses are not allowed: {dups}"
+            f"duplicate terms across clauses are not allowed: {sorted(dups)}"
         )
 
 
-def _term_frame_scan(
-    df: DataFrame,
-    ref: list[str],
-    n_scoring: int,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """(id, dl, tf0..tfN, n, avgdl, df0..df{n_scoring-1}): the in-row
-    tf projection joined with the ONE broadcast corpus-stats row —
-    the shared frame both compound scorers read. Zero shuffles."""
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    base = df.select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(ref)
-        ],
-    )
-    stats = base.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(n_scoring)
-        ],
-    )
-    return base.join(F.broadcast(stats))
-
-
-def _term_frame_atrest(
-    spark: SparkSession,
-    path: str,
-    ref: list[str],
-    n_scoring: int,
-    id_col: str,
-    index: tuple | None = None,
-) -> DataFrame:
-    """The same frame reassembled from the at-rest index: one
-    bucket-pruned postings probe over every referenced term, a
-    doc-keyed pivot agg, dl from doclens, stats + per-term df
-    broadcast. df per term from the probed postings equals the
-    scan's tf>0 count because a postings row exists iff tf > 0.
-    Docs with zero referenced-term hits are absent — every compound
-    gate requires >= 1 scoring hit, so the hit sets agree."""
-    from irclogbot_spark.operators.textindex import (
-        postings_tf,
-        probe_postings,
-        read_text_index,
-    )
-
-    # ``index``: pre-loaded (pidx, doclens, n_buckets) frames — the
-    # streamed-index form (streaming/textindex.py load_text returns
-    # frames, not a directory; generation layouts carry no single
-    # path). Path form reads the one-shot artifact.
-    pidx, doclens, n_buckets = index if index is not None else read_text_index(spark, path)
-    p = postings_tf(probe_postings(pidx, ref, n_buckets), id_col)
-    pivot = p.groupBy(id_col).agg(
-        *[
-            F.coalesce(
-                F.max(F.when(F.col("term") == t, F.col("tf"))), F.lit(0)
-            ).alias(f"tf{i}")
-            for i, t in enumerate(ref)
-        ]
-    )
-    dfreq = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = doclens.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    dfrow = dfreq.groupBy().pivot("term", ref).agg(F.first("df"))
-    dfrow = dfrow.select(
-        *[
-            F.coalesce(F.col(f"`{t}`"), F.lit(0)).alias(f"df{i}")
-            for i, t in enumerate(ref[:n_scoring])
-        ]
-    )
-    return (
-        pivot.join(doclens, id_col)
-        .join(F.broadcast(stats))
-        .join(F.broadcast(dfrow))
-    )
-
-
-def _bool_project(
-    j: DataFrame,
-    must: list[str],
-    should: list[str],
-    must_not: list[str],
-    msm: int,
-    dl_between: tuple[int, int] | None,
-    k: int,
-    id_col: str,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    n_scoring = len(must) + len(should)
-    n_ref = n_scoring + len(must_not)
-    score = None
-    for i in range(n_scoring):
-        s = _per_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        score = s if score is None else score + s
-    n_should = None
-    for i in range(len(must), n_scoring):
-        c = F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)
-        n_should = c if n_should is None else n_should + c
-    n_should = (n_should if n_should is not None else F.lit(0)).cast("long")
-    gate = F.lit(True)
-    for i in range(len(must)):
-        gate = gate & (F.col(f"tf{i}") > 0)
-    for i in range(n_scoring, n_ref):
-        gate = gate & (F.col(f"tf{i}") == 0)
-    if dl_between is not None:
-        lo, hi = dl_between
-        gate = gate & F.col("dl").between(F.lit(int(lo)), F.lit(int(hi)))
-    out = (
-        j.select(
-            F.col(id_col),
-            score.alias("score"),
-            n_should.alias("n_should"),
-            gate.alias("_g"),
-        )
-        .filter((F.col("_g")) & (F.col("n_should") >= F.lit(msm)))
-        .drop("_g")
-    )
-    return out.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
+def _scored_frame(src, terms, n_scoring, id_col, text_col, k1, b, stored=()):
+    """(frame, per-term scores of the first n_scoring terms) over the
+    single-field term frame — the shared start of every scorer."""
+    check_no_duplicate_terms(terms)
+    j = source(src, [text_col]).term_frame(terms, id_col, stored)
+    return j, [per_term_score(text_col, i, k1, b) for i in range(n_scoring)]
 
 
 def bool_search(
-    df: DataFrame,
+    src,
     must: list[str] | None = None,
     should: list[str] | None = None,
     must_not: list[str] | None = None,
@@ -300,88 +153,32 @@ def bool_search(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Scan-form scored bool query. Returns top-k
-    (id_col, score, n_should) ordered (score desc, id asc)."""
+    """Scored bool query. Returns top-k (id_col, score, n_should)
+    ordered (score desc, id asc)."""
     must, should, must_not = list(must or []), list(should or []), list(must_not or [])
     if not must and not should:
         raise ValueError("bool query needs at least one must or should term")
     msm = _resolve_msm(minimum_should_match, must, should)
-    ref = must + should + must_not
-    _check_no_duplicate_terms(ref)
-    j = _term_frame_scan(df, ref, len(must) + len(should), id_col, text_col)
-    return _bool_project(
-        j, must, should, must_not, msm, dl_between, k, id_col, k1, b
-    )
-
-
-def bool_search_atrest(
-    spark: SparkSession,
-    path: str,
-    must: list[str] | None = None,
-    should: list[str] | None = None,
-    must_not: list[str] | None = None,
-    minimum_should_match: int | str | None = None,
-    dl_between: tuple[int, int] | None = None,
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    index: tuple | None = None,
-) -> DataFrame:
-    """The bool query served from the at-rest text index —
-    bit-identical rows to :func:`bool_search` (same fixed-order
-    assembly over the reassembled term frame). ``index`` injects
-    pre-loaded (pidx, doclens, n_buckets) frames — the streamed
-    generation-layout form."""
-    must, should, must_not = list(must or []), list(should or []), list(must_not or [])
-    if not must and not should:
-        raise ValueError("bool query needs at least one must or should term")
-    msm = _resolve_msm(minimum_should_match, must, should)
-    ref = must + should + must_not
-    _check_no_duplicate_terms(ref)
-    j = _term_frame_atrest(
-        spark, path, ref, len(must) + len(should), id_col, index
-    )
-    return _bool_project(
-        j, must, should, must_not, msm, dl_between, k, id_col, k1, b
-    )
-
-
-def _dis_max_project(
-    j: DataFrame,
-    terms: list[str],
-    tie_breaker: float,
-    k: int,
-    id_col: str,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    scores: list[Column] = [
-        _per_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        for i in range(len(terms))
-    ]
-    total = None
-    for s in scores:
-        total = s if total is None else total + s
-    best = F.greatest(*scores) if len(scores) > 1 else scores[0]
-    score = best + F.lit(float(tie_breaker)) * (total - best)
-    gate = None
-    for i in range(len(terms)):
-        c = F.col(f"tf{i}") > 0
-        gate = c if gate is None else gate | c
-    return (
-        j.filter(gate)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    n_m, n_s = len(must), len(must) + len(should)
+    f = text_col
+    j, scores = _scored_frame(src, must + should + must_not, n_s, id_col, f, k1, b)
+    n_should = F.lit(0)
+    for i in range(n_m, n_s):
+        n_should = n_should + F.when(hit(f, i), 1).otherwise(0)
+    gate = [hit(f, i) for i in range(n_m)]
+    gate += [tf(f, i) == 0 for i in range(n_s, n_s + len(must_not))]
+    if dl_between is not None:
+        lo, hi = dl_between
+        gate.append(F.col(f"dl_{f}").between(F.lit(int(lo)), F.lit(int(hi))))
+    gate.append(n_should >= F.lit(msm))
+    return top_k(
+        j.filter(all_of(gate)), fixed_sum(scores), id_col, k,
+        n_should.cast("long").alias("n_should"),
     )
 
 
 def dis_max_search(
-    df: DataFrame,
+    src,
     terms: list[str],
     tie_breaker: float = 0.3,
     k: int = 10,
@@ -390,80 +187,21 @@ def dis_max_search(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Scan-form dis_max: top-k (id_col, score) where score =
-    max(per-term BM25) + tie_breaker * (sum - max); a doc matches
-    when >= 1 term matches."""
+    """dis_max: top-k (id_col, score) where score = max(per-term
+    BM25) + tie_breaker * (sum - max); a doc matches when >= 1 term
+    matches."""
+    terms = list(terms)
     if not terms:
         raise ValueError("dis_max needs at least one term")
-    _check_no_duplicate_terms(list(terms))
-    j = _term_frame_scan(df, list(terms), len(terms), id_col, text_col)
-    return _dis_max_project(j, list(terms), tie_breaker, k, id_col, k1, b)
-
-
-def dis_max_search_atrest(
-    spark: SparkSession,
-    path: str,
-    terms: list[str],
-    tie_breaker: float = 0.3,
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    index: tuple | None = None,
-) -> DataFrame:
-    """dis_max served from the at-rest index — bit-identical to
-    :func:`dis_max_search` (the >= 1-hit gate matches the pivot's
-    natural hit set, so no absent-doc asymmetry exists). ``index``
-    injects pre-loaded frames, the streamed form."""
-    if not terms:
-        raise ValueError("dis_max needs at least one term")
-    _check_no_duplicate_terms(list(terms))
-    j = _term_frame_atrest(
-        spark, path, list(terms), len(terms), id_col, index
-    )
-    return _dis_max_project(j, list(terms), tie_breaker, k, id_col, k1, b)
-
-
-def _boosting_project(
-    j: DataFrame,
-    positive: list[str],
-    negative: list[str],
-    negative_boost: float,
-    k: int,
-    id_col: str,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    n_pos = len(positive)
-    score = None
-    for i in range(n_pos):
-        s = _per_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        score = s if score is None else score + s
-    pos_gate = None
-    for i in range(n_pos):
-        c = F.col(f"tf{i}") > 0
-        pos_gate = c if pos_gate is None else pos_gate | c
-    neg_match = None
-    for i in range(n_pos, n_pos + len(negative)):
-        c = F.col(f"tf{i}") > 0
-        neg_match = c if neg_match is None else neg_match | c
-    if neg_match is not None:
-        score = score * F.when(
-            neg_match, F.lit(float(negative_boost))
-        ).otherwise(F.lit(1.0))
-    return (
-        j.filter(pos_gate)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    j, scores = _scored_frame(src, terms, len(terms), id_col, text_col, k1, b)
+    best = F.greatest(*scores) if len(scores) > 1 else scores[0]
+    score = best + F.lit(float(tie_breaker)) * (fixed_sum(scores) - best)
+    gate = any_of(hit(text_col, i) for i in range(len(terms)))
+    return top_k(j.filter(gate), score, id_col, k)
 
 
 def boosting_search(
-    df: DataFrame,
+    src,
     positive: list[str],
     negative: list[str],
     negative_boost: float = 0.5,
@@ -481,41 +219,20 @@ def boosting_search(
     engines evaluate, so scores value-hash."""
     if not positive:
         raise ValueError("boosting needs at least one positive term")
-    ref = list(positive) + list(negative or [])
-    _check_no_duplicate_terms(ref)
-    j = _term_frame_scan(df, ref, len(positive), id_col, text_col)
-    return _boosting_project(
-        j, list(positive), list(negative or []), negative_boost, k, id_col, k1, b
-    )
-
-
-def boosting_search_atrest(
-    spark: SparkSession,
-    path: str,
-    positive: list[str],
-    negative: list[str],
-    negative_boost: float = 0.5,
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    index: tuple | None = None,
-) -> DataFrame:
-    """boosting served from the at-rest index (the negative terms'
-    postings are read bucket-pruned into the pivot's demotion
-    column) — bit-identical to :func:`boosting_search`."""
-    if not positive:
-        raise ValueError("boosting needs at least one positive term")
-    ref = list(positive) + list(negative or [])
-    _check_no_duplicate_terms(ref)
-    j = _term_frame_atrest(spark, path, ref, len(positive), id_col, index)
-    return _boosting_project(
-        j, list(positive), list(negative or []), negative_boost, k, id_col, k1, b
-    )
+    positive, negative = list(positive), list(negative or [])
+    f, n_pos = text_col, len(positive)
+    j, scores = _scored_frame(src, positive + negative, n_pos, id_col, f, k1, b)
+    score = fixed_sum(scores)
+    if negative:
+        neg_match = any_of(hit(f, i) for i in range(n_pos, n_pos + len(negative)))
+        score = score * F.when(
+            neg_match, F.lit(float(negative_boost))
+        ).otherwise(F.lit(1.0))
+    return top_k(j.filter(any_of(hit(f, i) for i in range(n_pos))), score, id_col, k)
 
 
 def constant_score_search(
-    df: DataFrame,
+    src,
     filter_terms: list[str],
     boost: float = 1.0,
     dl_between: tuple[int, int] | None = None,
@@ -528,115 +245,26 @@ def constant_score_search(
     every hit exactly ``boost`` — the cacheable no-relevance wrapper
     ES deployments put around term/range filters. Deterministic page:
     first k hits by id (scores are all equal, so id IS the sort
-    key). Scan form is map-only — no stats row is even computed."""
+    key). The term frame is built without statistics: the scan form
+    is map-only."""
     if not filter_terms:
         raise ValueError("constant_score needs at least one filter term")
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    gate = None
-    for t in filter_terms:
-        c = F.size(F.filter(toks, _eq(t))) > 0
-        gate = c if gate is None else gate & c
+    terms, f = list(dict.fromkeys(filter_terms)), text_col
+    j = source(src, [f]).term_frame(terms, id_col, stats=False)
+    gate = all_of(hit(f, i) for i in range(len(terms)))
     if dl_between is not None:
         lo, hi = dl_between
-        gate = gate & F.size(toks).between(F.lit(int(lo)), F.lit(int(hi)))
+        gate = gate & F.col(f"dl_{f}").between(F.lit(int(lo)), F.lit(int(hi)))
     return (
-        df.filter(gate)
+        j.filter(gate)
         .select(F.col(id_col), F.lit(float(boost)).alias("score"))
         .orderBy(F.asc(id_col))
         .limit(k)
     )
 
 
-def constant_score_search_atrest(
-    spark: SparkSession,
-    path: str,
-    filter_terms: list[str],
-    boost: float = 1.0,
-    dl_between: tuple[int, int] | None = None,
-    k: int = 20,
-    id_col: str = "doc_id",
-    index: tuple | None = None,
-) -> DataFrame:
-    """constant_score from the at-rest index: the all-terms-present
-    gate is a bucket-pruned postings probe + one doc-keyed distinct
-    count (no tf, no stats); dl joins only when the range clause
-    needs it — bit-identical to :func:`constant_score_search`."""
-    from irclogbot_spark.operators.textindex import (
-        probe_postings,
-        read_text_index,
-    )
-
-    if not filter_terms:
-        raise ValueError("constant_score needs at least one filter term")
-    terms = list(dict.fromkeys(filter_terms))
-    pidx, doclens, n_buckets = (
-        index if index is not None else read_text_index(spark, path)
-    )
-    hits = (
-        probe_postings(pidx, terms, n_buckets)
-        .groupBy(id_col)
-        .agg(F.count_distinct(F.col("term")).alias("_nt"))
-        .filter(F.col("_nt") == F.lit(len(terms)))
-        .select(id_col)
-    )
-    if dl_between is not None:
-        lo, hi = dl_between
-        hits = hits.join(
-            doclens.filter(F.col("dl").between(F.lit(int(lo)), F.lit(int(hi)))),
-            id_col,
-            "left_semi",
-        )
-    return (
-        hits.select(F.col(id_col), F.lit(float(boost)).alias("score"))
-        .orderBy(F.asc(id_col))
-        .limit(k)
-    )
-
-
-def _terms_set_project(
-    j: DataFrame,
-    terms: list[str],
-    msm_col: str,
-    k: int,
-    id_col: str,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    score = None
-    n_matched = None
-    for i in range(len(terms)):
-        s = _per_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        score = s if score is None else score + s
-        c = F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)
-        n_matched = c if n_matched is None else n_matched + c
-    n_matched = n_matched.cast("long")
-    # the engine-wide >= 1-scoring-hit floor (the at-rest pivot only
-    # materializes hit docs): a per-doc msm of 0 or less clamps to 1
-    # — the module-docstring deviation, same reasoning as bool msm
-    req = F.greatest(F.col(msm_col).cast("long"), F.lit(1).cast("long"))
-    return (
-        j.select(
-            F.col(id_col),
-            score.alias("score"),
-            n_matched.alias("n_matched"),
-            (n_matched >= req).alias("_g"),
-        )
-        .filter(F.col("_g"))
-        .drop("_g")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def terms_set_search(
-    df: DataFrame,
+    src,
     terms: list[str],
     msm_col: str,
     k: int = 10,
@@ -648,76 +276,33 @@ def terms_set_search(
     """ES ``terms_set`` query (round 12 — §2H): match the ``terms``
     where the REQUIRED count comes from a per-document field
     (``minimum_should_match_field`` — the classic skills/tags
-    deployment: a job posting row says how many of the searched
-    skills it requires). A doc matches when its number of matching
-    terms >= its own msm field (clamped to >= 1 — the engine's
-    >= 1-scoring-hit contract); score = the fixed-order BM25 sum of
-    the matching terms (tf=0 terms contribute exactly 0.0). Returns
-    top-k (id, score, n_matched). Scan form: the msm field rides the
-    same in-row projection as the tf columns — zero corpus
-    shuffles."""
+    deployment). A doc matches when its number of matching terms >=
+    its own msm field, clamped to >= 1 (the >= 1-scoring-hit
+    contract); score = the fixed-order BM25 sum of the matching
+    terms. Returns top-k (id, score, n_matched). The msm field is a
+    stored-field fetch: in-row on the scan source, a co-keyed join of
+    the index's ``stored`` frame on the index source."""
+    terms = list(terms)
     if not terms:
         raise ValueError("terms_set needs at least one term")
-    _check_no_duplicate_terms(list(terms))
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    base = df.select(
-        F.col(id_col),
-        F.col(msm_col),
-        F.size(toks).alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(terms)
-        ],
+    f = text_col
+    j, scores = _scored_frame(src, terms, len(terms), id_col, f, k1, b, [msm_col])
+    n_matched = fixed_sum(
+        F.when(hit(f, i), 1).otherwise(0) for i in range(len(terms))
+    ).cast("long")
+    req = F.greatest(F.col(msm_col).cast("long"), F.lit(1).cast("long"))
+    return top_k(
+        j.filter(n_matched >= req), fixed_sum(scores), id_col, k,
+        n_matched.alias("n_matched"),
     )
-    stats = base.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(len(terms))
-        ],
-    )
-    j = base.join(F.broadcast(stats))
-    return _terms_set_project(j, list(terms), msm_col, k, id_col, k1, b)
 
 
-def terms_set_search_atrest(
-    spark: SparkSession,
-    path: str,
-    corpus: DataFrame,
-    terms: list[str],
-    msm_col: str,
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    index: tuple | None = None,
-) -> DataFrame:
-    """terms_set from the at-rest index: BM25 inputs from the
-    bucket-pruned probe, the per-doc msm FIELD from a column-pruned
-    corpus fetch (the stored-fields read — the function_score
-    convention), joined co-keyed on the id. Bit-identical to
-    :func:`terms_set_search` (the clamp makes the zero-hit
-    divergence unreachable, as in bool)."""
-    if not terms:
-        raise ValueError("terms_set needs at least one term")
-    _check_no_duplicate_terms(list(terms))
-    j = _term_frame_atrest(spark, path, list(terms), len(terms), id_col, index)
-    j = j.join(corpus.select(id_col, msm_col), id_col)
-    return _terms_set_project(j, list(terms), msm_col, k, id_col, k1, b)
-
-
-def _function_factor(spec: dict, fields: dict):
+def _function_factor(spec: dict):
     """One ES score function as a Column factor. Supported kinds —
     all pure rational arithmetic, so the factors value-hash against
     the SQL twin (the gauss/exp decays need exp(), which differs
-    across libms in the last ulp and could never hash — the linear
-    decay is the one ES decay shape with exact cross-engine
-    semantics, the same reasoning as bm25_rank's rational idf):
+    across libms in the last ulp; the linear decay is the one ES
+    decay shape with exact cross-engine semantics):
 
     - field_value_factor: factor * field (ES modifier 'none';
       missing -> the ``missing`` default, ES's own knob)
@@ -729,7 +314,7 @@ def _function_factor(spec: dict, fields: dict):
     kind = spec["kind"]
     if kind == "field_value_factor":
         v = F.coalesce(
-            fields[spec["field"]].cast("double"),
+            F.col(spec["field"]).cast("double"),
             F.lit(float(spec.get("missing", 1.0))),
         )
         return F.lit(float(spec.get("factor", 1.0))) * v
@@ -745,7 +330,7 @@ def _function_factor(spec: dict, fields: dict):
         if scale <= 0.0:
             raise ValueError(f"linear_decay requires scale > 0, got {scale}")
         s = scale / (1.0 - decay)
-        dist = F.abs(fields[spec["field"]] - F.lit(spec["origin"]))
+        dist = F.abs(F.col(spec["field"]) - F.lit(spec["origin"]))
         offset = float(spec.get("offset", 0.0))
         if offset:
             dist = F.greatest(F.lit(0.0), dist - F.lit(offset))
@@ -753,61 +338,8 @@ def _function_factor(spec: dict, fields: dict):
     raise ValueError(f"unknown score function kind {kind!r}")
 
 
-def _function_score_project(
-    j: DataFrame,
-    terms: list[str],
-    functions: list[dict],
-    field_cols: dict,
-    score_mode: str,
-    boost_mode: str,
-    k: int,
-    id_col: str,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    # validate modes up front — with <= 1 function the combine
-    # branches never run, so a typo'd mode would otherwise silently
-    # behave like the default
-    if score_mode not in ("multiply", "sum"):
-        raise ValueError(f"unknown score_mode {score_mode!r}")
-    if boost_mode not in ("multiply", "sum"):
-        raise ValueError(f"unknown boost_mode {boost_mode!r}")
-    qscore = None
-    for i in range(len(terms)):
-        s = _per_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        qscore = s if qscore is None else qscore + s
-    combined = None
-    for spec in functions:
-        f = _function_factor(spec, field_cols)
-        if combined is None:
-            combined = f
-        elif score_mode == "multiply":
-            combined = combined * f
-        else:  # "sum" — modes validated above
-            combined = combined + f
-    if combined is None:
-        score = qscore
-    elif boost_mode == "multiply":
-        score = qscore * combined
-    else:  # "sum"
-        score = qscore + combined
-    gate = None
-    for i in range(len(terms)):
-        c = F.col(f"tf{i}") > 0
-        gate = c if gate is None else gate | c
-    return (
-        j.filter(gate)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def function_score_search(
-    df: DataFrame,
+    src,
     terms: list[str],
     functions: list[dict],
     score_mode: str = "multiply",
@@ -823,85 +355,33 @@ def function_score_search(
     constant weights, linear decay — the recency/popularity-boost
     deployment). Factors combine per ``score_mode`` in declaration
     order, then fold into the query score per ``boost_mode`` —
-    identical expression trees in the SQL twin. Scan form: the
-    function fields ride the same in-row projection as the tf
-    columns; still zero corpus shuffles."""
+    identical expression trees in the SQL twin. The function fields
+    are a stored-field fetch (see :func:`terms_set_search`)."""
+    # validate modes up front — with <= 1 function the combine
+    # branches never run, so a typo'd mode would otherwise silently
+    # behave like the default
+    if score_mode not in ("multiply", "sum"):
+        raise ValueError(f"unknown score_mode {score_mode!r}")
+    if boost_mode not in ("multiply", "sum"):
+        raise ValueError(f"unknown boost_mode {boost_mode!r}")
+    terms = list(terms)
     if not terms:
         raise ValueError("function_score needs at least one term")
-    _check_no_duplicate_terms(list(terms))
+    factors = [_function_factor(spec) for spec in functions]
     fields = sorted({s["field"] for s in functions if "field" in s})
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    base = df.select(
-        F.col(id_col),
-        *[F.col(f) for f in fields],
-        F.size(toks).alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(terms)
-        ],
-    )
-    stats = base.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(len(terms))
-        ],
-    )
-    j = base.join(F.broadcast(stats))
-    return _function_score_project(
-        j, list(terms), functions, {f: F.col(f) for f in fields},
-        score_mode, boost_mode, k, id_col, k1, b,
-    )
-
-
-def _expand_fuzzy(
-    vocab: DataFrame,
-    stems: list[str],
-    exclude: set[str],
-    max_dist: int,
-    max_expansions: int,
-) -> list[str]:
-    """Expand each fuzzy stem against a (term, df) dictionary frame
-    to the vocabulary types within banded Levenshtein <= max_dist,
-    in ES's TOP-FREQUENCY REWRITE order (df desc, term asc — the
-    fuzzy_term_search_atrest convention), capped PER STEM at
-    max_expansions. Terms already referenced by another clause (or
-    by an earlier stem) are excluded BEFORE the cap — the round-13
-    prefix-expansion convention (querystring._expand_prefixes): a
-    stem always yields the full max_expansions new terms when the
-    dictionary has them; the excluded term's extra should-clause
-    score is the same documented deviation. The driver-side collect
-    is bounded by len(stems) * max_expansions (the enforced-bound
-    convention, VERDICT r10 wrong #3)."""
-    if max_dist < 0:
-        raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    if max_expansions is None or max_expansions <= 0:
-        raise ValueError(f"max_expansions must be > 0, got {max_expansions}")
-    out: list[str] = []
-    for s in stems:
-        skip = set(exclude) | set(out)
-        dist = F.levenshtein(F.col("term"), F.lit(s), max_dist)
-        cand = vocab.filter(
-            (F.abs(F.length("term") - F.lit(len(s))) <= F.lit(max_dist))
-            & (dist >= 0)
-            & (dist <= max_dist)
-        )
-        if skip:
-            cand = cand.filter(~F.col("term").isin(sorted(skip)))
-        cand = cand.orderBy(F.desc("df"), F.asc("term")).limit(
-            int(max_expansions)
-        )
-        out.extend(r["term"] for r in cand.collect())  # bounded
-    return out
+    j, scores = _scored_frame(src, terms, len(terms), id_col, text_col, k1, b, fields)
+    score = fixed_sum(scores)
+    if factors:
+        combined = factors[0]
+        for fac in factors[1:]:
+            combined = combined * fac if score_mode == "multiply" else combined + fac
+        score = score * combined if boost_mode == "multiply" else score + combined
+    gate = any_of(hit(text_col, i) for i in range(len(terms)))
+    return top_k(j.filter(gate), score, id_col, k)
 
 
 def bool_fuzzy_search(
-    df: DataFrame,
+    src,
     must: list[str] | None = None,
     should: list[str] | None = None,
     must_not: list[str] | None = None,
@@ -916,149 +396,29 @@ def bool_fuzzy_search(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """ES bool query with FUZZY clauses (round 13 — VERDICT r12 next
-    #4: ES ``match`` accepts ``fuzziness`` inside compound queries;
-    a Kibana search bar with a typo compiles to exactly this). Each
-    ``fuzzy`` stem expands against the corpus term dictionary
-    (banded Levenshtein <= max_dist, ES's top-frequency rewrite
-    order, capped at max_expansions per stem) and the expansions
-    join the SHOULD list — ES relaxes a multi-expansion fuzzy clause
-    to a should group the same way, and the compiled query IS
-    :func:`bool_search`, so every scale property (zero corpus
-    shuffles beyond the term-type distinct; the expansion is a
-    Heaps-sublinear vocabulary aggregate) and the output contract
-    (id, score, n_should) are inherited, not reimplemented.
+    """ES bool query with FUZZY clauses (round 13 — ES ``match``
+    accepts ``fuzziness`` inside compound queries; a search bar with
+    a typo compiles to exactly this). Each ``fuzzy`` stem expands
+    against the source's term dictionary (banded Levenshtein <=
+    max_dist, ES's top-frequency rewrite order, capped at
+    max_expansions per stem — termsource.expand_terms; the index
+    dictionary's df equals the scan's per-type document count, so
+    both sources pick identical expansions) and the expansions join
+    the SHOULD list — ES relaxes a multi-expansion fuzzy clause to a
+    should group the same way. The compiled query IS
+    :func:`bool_search`.
 
     Raises when no positive clause survives (the programmer-facing
     bool contract); route raw search-box input through
     simple_query_string for the never-throws behavior."""
-    must = list(must or [])
-    should = list(should or [])
-    must_not = list(must_not or [])
-    stems = list(fuzzy or [])
-    if stems:
-        from irclogbot_spark.functions.text import WORD_RE
-
-        toks = F.regexp_extract_all(F.col(text_col), F.lit(WORD_RE), F.lit(0))
-        vocab = (
-            df.select(
-                F.col(id_col),
-                F.explode(F.array_distinct(toks)).alias("term"),
-            )
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-        )
-        should = should + _expand_fuzzy(
-            vocab,
-            stems,
-            set(must + should + must_not),
-            max_dist,
-            max_expansions,
+    must, should, must_not = list(must or []), list(should or []), list(must_not or [])
+    s = source(src, [text_col])
+    if fuzzy:
+        should = should + expand_terms(
+            s.vocab(), list(fuzzy), max_expansions,
+            exclude=set(must + should + must_not), max_dist=max_dist,
         )
     return bool_search(
-        df,
-        must=must,
-        should=should or None,
-        must_not=must_not or None,
-        minimum_should_match=minimum_should_match,
-        dl_between=dl_between,
-        k=k,
-        id_col=id_col,
-        text_col=text_col,
-        k1=k1,
-        b=b,
-    )
-
-
-def bool_fuzzy_search_atrest(
-    spark: SparkSession,
-    path: str,
-    must: list[str] | None = None,
-    should: list[str] | None = None,
-    must_not: list[str] | None = None,
-    fuzzy: list[str] | None = None,
-    max_dist: int = 1,
-    max_expansions: int = 50,
-    minimum_should_match: int | str | None = None,
-    dl_between: tuple[int, int] | None = None,
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    index: tuple | None = None,
-) -> DataFrame:
-    """bool_fuzzy_search served from the at-rest index: the fuzzy
-    expansion walks the VOCAB SIDECAR (the ES term-dictionary walk —
-    the fuzzy_term_search_atrest pruning boundary; the sidecar's df
-    column equals the scan's per-type document count, so the
-    top-frequency rewrite picks bit-identical expansions), then the
-    compiled bool query runs through :func:`bool_search_atrest`'s
-    bucket-pruned probe — bit-identical to the scan form. ``index``
-    injects pre-loaded (pidx, doclens, n_buckets) frames (the
-    streamed form; df derives from the postings since a streamed
-    index carries no sidecar)."""
-    must = list(must or [])
-    should = list(should or [])
-    must_not = list(must_not or [])
-    stems = list(fuzzy or [])
-    if stems:
-        from irclogbot_spark.operators.textindex import read_vocab
-
-        vocab = (
-            index[0].groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            if index is not None
-            else read_vocab(spark, path).select("term", "df")
-        )
-        should = should + _expand_fuzzy(
-            vocab,
-            stems,
-            set(must + should + must_not),
-            max_dist,
-            max_expansions,
-        )
-    return bool_search_atrest(
-        spark,
-        path,
-        must=must,
-        should=should or None,
-        must_not=must_not or None,
-        minimum_should_match=minimum_should_match,
-        dl_between=dl_between,
-        k=k,
-        id_col=id_col,
-        k1=k1,
-        b=b,
-        index=index,
-    )
-
-
-def function_score_search_atrest(
-    spark: SparkSession,
-    path: str,
-    corpus: DataFrame,
-    terms: list[str],
-    functions: list[dict],
-    score_mode: str = "multiply",
-    boost_mode: str = "multiply",
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    index: tuple | None = None,
-) -> DataFrame:
-    """function_score from the at-rest index: BM25 inputs from the
-    bucket-pruned probe, the function FIELDS from a column-pruned
-    corpus fetch (the stored-fields/doc-values read — the collapse
-    convention), joined co-keyed on the id. Bit-identical to
-    :func:`function_score_search`."""
-    if not terms:
-        raise ValueError("function_score needs at least one term")
-    _check_no_duplicate_terms(list(terms))
-    fields = sorted({s["field"] for s in functions if "field" in s})
-    j = _term_frame_atrest(spark, path, list(terms), len(terms), id_col, index)
-    if fields:
-        j = j.join(corpus.select(id_col, *fields), id_col)
-    return _function_score_project(
-        j, list(terms), functions, {f: F.col(f) for f in fields},
-        score_mode, boost_mode, k, id_col, k1, b,
+        s, must, should, must_not, minimum_should_match, dl_between,
+        k, id_col, text_col, k1, b,
     )

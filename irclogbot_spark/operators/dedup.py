@@ -196,14 +196,17 @@ def minhash_signature(
     # (wrapping in a validity CASE here would reference the fold
     # twice and re-trigger the inlining blowup).
     sql_hash = _HASH_SQL.get(hash_fn or xxhash31)
-    if sql_hash is not None and isinstance(text, str):
+    if sql_hash is not None and isinstance(text, str) and "." not in text:
         # expr() fast path (round-14 optimization): the Column-API
         # construction of the num_perm-lane fold issued ~250 py4j
         # round trips per call — ~0.6 s of pure DRIVER time per
         # query build (measured; the incremental/minhash queries pay
         # it 2-3x per pass). One parser call builds the identical
-        # expression tree.
-        hs_sql = f"transform({_shingles_sql(f'`{text}`', n)}, s -> {sql_hash('s')})"
+        # expression tree. The name is quoted with its backticks
+        # doubled; a dotted name is a struct-field path under F.col,
+        # so it takes the Column path below to resolve the same way.
+        quoted = "`" + text.replace("`", "``") + "`"
+        hs_sql = f"transform({_shingles_sql(quoted, n)}, s -> {sql_hash('s')})"
         lanes = ", ".join(
             f"pmod(h * CAST({a} AS BIGINT) + {b}, CAST({_MH_PRIME} AS BIGINT))"
             for a, b in perms

@@ -114,9 +114,10 @@ def pagerank(
         # sparkContext); the keyed repartition without an explicit
         # count still pins the per-round partitioning there.
         n_part = ew.sparkSession.sparkContext.defaultParallelism
-        ew = ew.repartition(n_part, F.col(part_col))
     except Exception:
         ew = ew.repartition(F.col(part_col))
+    else:
+        ew = ew.repartition(n_part, F.col(part_col))
     if n_iter == 0:
         # zero rounds: every endpoint keeps the initial rank R0 (the
         # pre-round-13 contract; the contribution loop below would

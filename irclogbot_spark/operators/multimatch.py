@@ -1,9 +1,13 @@
 """ES multi-field retrieval — ``multi_match`` (types best_fields,
-most_fields, and cross_fields) and ``match_phrase_prefix``, the
-high-traffic search-box query types
-(SURVEY.md §2H; the reference's implied search UI — utils.py:93-103's
-Flask vestige — is exactly a search box, and every ES search box
-issues these; VERDICT r11 next #2).
+most_fields and cross_fields) and ``match_phrase_prefix``, the
+high-traffic search-box query types (SURVEY.md §2H; the reference's
+implied search UI — utils.py:93-103's Flask vestige — is exactly a
+search box, and every ES search box issues these).
+
+Both are ONE function over either term source of
+operators/termsource.py: a corpus DataFrame (scan) or loaded text
+indexes (``read_text_index`` / ``load_text``; multi_match takes one
+index per field — a field is its own index, as in ES).
 
 multi_match best_fields semantics (the ES contract): the query
 compiles to a dis_max over per-FIELD match queries. Each field f
@@ -12,96 +16,62 @@ field is its own corpus in ES) times the field's boost; the doc's
 score is max over fields + tie_breaker * (sum - max); a doc matches
 when >= 1 term matches in >= 1 field. Per-field sums and the
 cross-field total use fixed declaration order, so the scores
-value-hash against the SQL twin (the boolquery.py convention).
-``most_fields`` keeps the identical per-field frame and replaces the
-dis_max combine with the plain sum (ES compiles most_fields to a
-bool should over the per-field match queries).
+value-hash against the SQL twin. ``most_fields`` replaces the dis_max
+combine with the plain sum (ES compiles it to a bool should over the
+per-field match queries).
 
-``cross_fields`` (round 13 — VERDICT r12 next #2, the last
-multi_match type) is TERM-centric where the other two are
-field-centric: ES treats the field group as one logical field for
-term statistics (the structured first-name/last-name, street/city
-deployment — 'Will Smith' should not reward 'Will' being rare in
-last_name). Each term's document frequency BLENDS across the group —
-df_blend(t) = max over fields of df_field(t), ES's
-BlendedTermQuery — and the term then scores in every field with that
-shared df (keeping each field's own dl/avgdl length norm and boost);
-the per-term cross-field combine is the dis_max
-max + tie_breaker * (sum - max) (ES's dismaxBlendedQuery;
-tie_breaker defaults to 0.0 = pure best-of), and the TERMS sum in
-declaration order (operator OR). A single field degenerates all
-three types to the same score — blending over one field is its own
-df and max = sum — the pinned degeneracy test. All arithmetic stays
-the engine's rational BM25, so scores value-hash against the SQL
-twin.
+``cross_fields`` (round 13) is TERM-centric: ES treats the field
+group as one logical field for term statistics (the structured
+first-name/last-name deployment — 'Will Smith' should not reward
+'Will' being rare in last_name). Each term's df BLENDS to the max
+over fields (ES's BlendedTermQuery), the term scores in every field
+with that shared df (own dl/avgdl norm and boost), fields combine per
+term as max + tie_breaker * (sum - max) (tie_breaker defaults to 0.0
+= pure best-of), and the TERMS sum in declaration order. A single
+field degenerates all three types to the same score.
 
-The ``operator`` knob (round 13) compiles ES's match operator into
-the gate: ``and`` under the field-centric types requires one field
-to contain ALL terms (that field's match query is an AND; a
-non-matching field contributes exactly 0.0), and under cross_fields
-requires every term somewhere in the group (term-centric). Gate and
-expression changes only — no new dataflow in either physical form.
+The ``operator`` knob (round 13): ``and`` under the field-centric
+types requires one field to contain ALL terms (that field's match
+query is an AND; a non-matching field contributes exactly 0.0), and
+under cross_fields requires every term somewhere in the group. Gate
+and expression changes only.
 
 match_phrase_prefix semantics: a phrase whose LAST position is a
-prefix — the query "quick brown f" matches docs containing
-"quick brown <token starting with f>". ES expands the prefix against
-the term dictionary in TERM ORDER, capped at ``max_expansions``
-(default 50 — the same enforced bound fuzzy_term_search got in r11),
-and only expanded terms count. Result rows carry the phrase-prefix
-occurrence count (every matching start position, overlaps included —
-the phrase_count_col convention).
-
-Scale shape:
-
-- multi_match scan form: one in-row projection computes per-field dl
-  + per-field-per-term tf (each field's token array materializes
-  once); ONE global aggregate produces the corpus-stats row
-  (n, per-field avgdl, per-field-per-term df) and broadcasts back;
-  the per-field scores, the dis_max combine, and the gate are
-  map-side expressions; top-k is a partial TakeOrdered. Zero corpus
-  shuffles — identical to the boolquery.py scan contract.
-- multi_match at-rest form: one bucket-pruned postings probe PER
-  FIELD INDEX (a field is its own index, as in ES), one hit-sized
-  pivot per field, per-field stats broadcast; the per-field score
-  frames full-outer-join on the id (hit-sized — a doc appears only
-  under fields it hits; a missing field contributes exactly 0.0, the
-  same value its tf=0 scan expression yields, so the two physical
-  forms stay bit-identical).
-- match_phrase_prefix scan form: the prefix expansion is a
-  term-type-sized distinct (Heaps-sublinear) cut to max_expansions
-  by a total order; candidate starts are found in-row (the
-  phrase_search start-position filter) and only MATCHED (id,
-  last_token) pairs leave the row — a broadcast join against the
-  tiny expansion set and one hit-sized count aggregate finish it.
-  Document text never shuffles.
-- match_phrase_prefix at-rest form: the expansion walks the vocab
-  sidecar (the ES term-dictionary walk — the fuzzy_term_search_atrest
-  pruning-boundary contract, textindex.py module docstring), collects
-  the <= max_expansions matched types (bounded, the learned-table
-  size class), and probes ONLY the fixed phrase terms' + expanded
-  terms' postings with literal bucket PartitionFilters; position
-  intersection is the phrase_search_indexed algorithm with the last
-  offset tested against the union of expansion position lists.
+prefix — "quick brown f" matches docs containing "quick brown <token
+starting with f>". ES expands the prefix against the term dictionary
+in TERM ORDER, capped at ``max_expansions`` (default 50), and only
+expanded terms count. Result rows carry the phrase-prefix occurrence
+count (every matching start, overlaps included). The expansion is the
+shared dictionary walk (a bounded driver-side collect); the phrase
+step is the source's own algorithm — an in-row start search over the
+scan, position intersection over the index.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from irclogbot_spark.functions.text import WORD_RE
-from irclogbot_spark.operators.boolquery import (
-    _check_no_duplicate_terms,
-    _per_term_score,
+from irclogbot_spark.operators.boolquery import check_no_duplicate_terms
+from irclogbot_spark.operators.termsource import (
+    all_of,
+    any_of,
+    expand_terms,
+    fixed_sum,
+    hit,
+    per_term_score,
+    source,
+    top_k,
 )
+
+#: the supported multi_match types (ES's analyzer-compatible group)
+MM_TYPES = ("best_fields", "most_fields", "cross_fields")
 
 
 def _norm_fields(fields) -> list[tuple[str, float]]:
     """Accept [(field, boost), ...] or {field: boost} (dict order is
     declaration order); validate non-empty, unique, positive."""
-    pairs = list(fields.items()) if isinstance(fields, dict) else [
-        (f, float(b)) for f, b in fields
-    ]
+    pairs = list(fields.items()) if isinstance(fields, dict) else list(fields)
     if not pairs:
         raise ValueError("multi_match needs at least one field")
     names = [f for f, _ in pairs]
@@ -113,96 +83,13 @@ def _norm_fields(fields) -> list[tuple[str, float]]:
     return [(f, float(b)) for f, b in pairs]
 
 
-def _field_score(
-    fname: str, boost: float, n_terms: int, k1: float, b: float, n_col: str = "n"
-) -> Column:
-    """boost * fixed-order sum of per-term BM25 under field ``fname``'s
-    own statistics — the per-field match subquery's score. ``n_col``
-    names the corpus-size column (the at-rest joined frame carries
-    one per field as ``n_<field>``; the scan form one shared ``n``)."""
-    s = None
-    for i in range(n_terms):
-        t = _per_term_score(
-            F.col(f"tf_{fname}_{i}"),
-            F.col(f"df_{fname}_{i}"),
-            F.col(n_col),
-            F.col(f"avgdl_{fname}"),
-            F.col(f"dl_{fname}"),
-            k1,
-            b,
-        )
-        s = t if s is None else s + t
-    return F.lit(boost) * s
+def _dis_max(scores: list[Column], tie_breaker: float) -> Column:
+    best = F.greatest(*scores) if len(scores) > 1 else scores[0]
+    return best + F.lit(float(tie_breaker)) * (fixed_sum(scores) - best)
 
 
-#: the supported multi_match types (ES's analyzer-compatible group)
-MM_TYPES = ("best_fields", "most_fields", "cross_fields")
-
-
-def _cross_fields_score(
-    pairs: list[tuple[str, float]],
-    n_terms: int,
-    k1: float,
-    b: float,
-    tie_breaker: float,
-) -> Column:
-    """The term-centric cross_fields score over the shared per-field
-    frame: per term, df blends to the max across the field group
-    (BlendedTermQuery), the term scores in each field with that
-    shared df (own dl/avgdl norm, own boost), fields combine per
-    term as max + tie_breaker * (sum - max), and terms sum in
-    declaration order. Pure map-side arithmetic — no extra dataflow
-    over the best_fields frame."""
-    total = None
-    for i in range(n_terms):
-        dfs = [F.col(f"df_{fname}_{i}") for fname, _ in pairs]
-        df_blend = F.greatest(*dfs) if len(dfs) > 1 else dfs[0]
-        per_field = [
-            F.lit(boost)
-            * _per_term_score(
-                F.col(f"tf_{fname}_{i}"),
-                df_blend,
-                F.col("n"),
-                F.col(f"avgdl_{fname}"),
-                F.col(f"dl_{fname}"),
-                k1,
-                b,
-            )
-            for fname, boost in pairs
-        ]
-        s = None
-        for c in per_field:
-            s = c if s is None else s + c
-        best = F.greatest(*per_field) if len(per_field) > 1 else per_field[0]
-        term_score = best + F.lit(float(tie_breaker)) * (s - best)
-        total = term_score if total is None else total + term_score
-    return total
-
-
-def _combine_fields(
-    per_field: list[Column], mm_type: str, tie_breaker: float
-) -> Column:
-    """The field-centric combines: ``best_fields`` is the dis_max
-    max + tie_breaker * (sum - max); ``most_fields`` is ES's bool
-    should over the per-field matches — the plain fixed-order sum
-    (tie_breaker is meaningless there and must stay default).
-    ``cross_fields`` never reaches here — it is term-centric and
-    goes through :func:`_cross_fields_score`."""
-    if mm_type not in ("best_fields", "most_fields"):
-        raise ValueError(f"unknown multi_match type {mm_type!r}")
-    total = None
-    for s in per_field:
-        total = s if total is None else total + s
-    if mm_type == "most_fields":
-        if tie_breaker != 0.0:
-            raise ValueError("tie_breaker only applies to best_fields")
-        return total
-    best = F.greatest(*per_field) if len(per_field) > 1 else per_field[0]
-    return best + F.lit(float(tie_breaker)) * (total - best)
-
-
-def multi_match_best_fields(
-    df: DataFrame,
+def multi_match(
+    src,
     terms: list[str],
     fields,
     tie_breaker: float = 0.0,
@@ -213,444 +100,91 @@ def multi_match_best_fields(
     mm_type: str = "best_fields",
     operator: str = "or",
 ) -> DataFrame:
-    """Scan-form multi_match: top-k (id_col, score) ordered
-    (score desc, id asc). ``fields`` maps field column -> boost
-    ([(name, boost), ...] or dict in declaration order). ``mm_type``
-    picks the combine over the same per-field frame: ``best_fields``
-    (field dis_max, the default), ``most_fields`` (per-field sum —
-    ES's the-more-fields-match-the-better variant), or
-    ``cross_fields`` (round 13 — term-centric blended-df dis_max,
-    the module-docstring semantics; one different map-side
-    expression, same zero-shuffle scan shape).
-
-    ``operator`` (round 13 — ES's match-operator knob): ``"or"``
-    (default) matches on >= 1 term in >= 1 field. ``"and"`` under
-    best/most_fields requires some FIELD to contain ALL terms (the
-    per-field match queries compile with operator=and; a field
-    missing a term does not match and contributes exactly 0.0 — ES's
-    field-centric AND), and under cross_fields requires every TERM
-    to appear in >= 1 field (the term-centric AND — the blended
-    score expression is unchanged, only the gate tightens). Pure
-    gate/expression changes — the zero-shuffle scan shape is
-    untouched."""
+    """multi_match: top-k (id_col, score) ordered (score desc, id
+    asc). ``fields`` maps field -> boost ([(name, boost), ...] or a
+    dict, in declaration order). ``src`` is a DataFrame carrying one
+    text column per field, or a {field: TextIndex} mapping. A doc
+    absent from a field's index hits has tf=0 there, so its per-term
+    BM25 is exactly the 0.0 the scan's tf=0 expression yields.
+    ``mm_type`` and ``operator`` per the module docstring;
+    tie_breaker applies to best_fields and cross_fields only."""
     if mm_type not in MM_TYPES:
         raise ValueError(f"unknown multi_match type {mm_type!r}")
     if operator not in ("or", "and"):
         raise ValueError(f"unknown multi_match operator {operator!r}")
+    if mm_type == "most_fields" and tie_breaker != 0.0:
+        raise ValueError("tie_breaker only applies to best_fields")
+    terms = list(terms)
     if not terms:
         raise ValueError("multi_match needs at least one term")
-    _check_no_duplicate_terms(list(terms))
+    check_no_duplicate_terms(terms)
     pairs = _norm_fields(fields)
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    cols = [F.col(id_col)]
-    for fname, _ in pairs:
-        # NULL field -> '' (round 13, per ADVICE r12): tokenizing a
-        # NULL column yields NULL, and F.size(NULL) = -1 would poison
-        # dl/tf (a negative tf feeds BM25), while the at-rest form
-        # coalesces a missing field to exactly 0.0 — the empty string
-        # gives dl=0/tf=0, so a NULL field scores 0.0 in BOTH
-        # physical forms (bit-identity preserved)
-        toks = F.regexp_extract_all(
-            F.coalesce(F.col(fname), F.lit("")), F.lit(WORD_RE), F.lit(0)
-        )
-        cols.append(F.size(toks).alias(f"dl_{fname}"))
-        cols.extend(
-            F.size(F.filter(toks, _eq(t))).alias(f"tf_{fname}_{i}")
-            for i, t in enumerate(terms)
-        )
-    base = df.select(*cols)
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for fname, _ in pairs:
-        aggs.append(
-            (F.sum(f"dl_{fname}").cast("double") / F.count(F.lit(1))).alias(
-                f"avgdl_{fname}"
-            )
-        )
-        aggs.extend(
-            F.sum(
-                F.when(F.col(f"tf_{fname}_{i}") > 0, 1).otherwise(0)
-            ).alias(f"df_{fname}_{i}")
-            for i in range(len(terms))
-        )
-    j = base.join(F.broadcast(base.agg(*aggs)))
-
-    def _field_full_match(fname: str):
-        c = None
-        for i in range(len(terms)):
-            t = F.col(f"tf_{fname}_{i}") > 0
-            c = t if c is None else c & t
-        return c
-
+    names, nt = [f for f, _ in pairs], len(terms)
+    j = source(src, names).term_frame(terms, id_col)
+    full = {f: all_of(hit(f, i) for i in range(nt)) for f in names}
+    if operator == "or":
+        gate = any_of(hit(f, i) for f in names for i in range(nt))
+    elif mm_type == "cross_fields":
+        # term-centric AND: every term in >= 1 field
+        gate = all_of(any_of(hit(f, i) for f in names) for i in range(nt))
+    else:
+        # field-centric AND: some field contains ALL terms
+        gate = any_of(full.values())
     if mm_type == "cross_fields":
-        score = _cross_fields_score(pairs, len(terms), k1, b, tie_breaker)
+        per_term = []
+        for i in range(nt):
+            dfs = [F.col(f"df_{f}_{i}") for f in names]
+            blend = F.greatest(*dfs) if len(dfs) > 1 else dfs[0]
+            in_fields = [
+                F.lit(bo) * per_term_score(f, i, k1, b, blend) for f, bo in pairs
+            ]
+            per_term.append(_dis_max(in_fields, tie_breaker))
+        score = fixed_sum(per_term)
     else:
         scores = [
-            _field_score(fname, boost, len(terms), k1, b)
-            for fname, boost in pairs
+            F.lit(bo) * fixed_sum(per_term_score(f, i, k1, b) for i in range(nt))
+            for f, bo in pairs
         ]
         if operator == "and":
-            # a field missing a term does not match: it contributes
-            # exactly 0.0 (the same literal both physical forms use)
+            # a field missing a term does not match: it contributes 0.0
             scores = [
-                F.when(_field_full_match(fname), s).otherwise(F.lit(0.0))
-                for (fname, _), s in zip(pairs, scores)
+                F.when(full[f], s).otherwise(F.lit(0.0))
+                for f, s in zip(names, scores)
             ]
-        score = _combine_fields(scores, mm_type, tie_breaker)
-    gate = None
-    if operator == "and" and mm_type == "cross_fields":
-        # term-centric AND: every term in >= 1 field
-        for i in range(len(terms)):
-            c = None
-            for fname, _ in pairs:
-                t = F.col(f"tf_{fname}_{i}") > 0
-                c = t if c is None else c | t
-            gate = c if gate is None else gate & c
-    elif operator == "and":
-        # field-centric AND: some field contains ALL terms
-        for fname, _ in pairs:
-            c = _field_full_match(fname)
-            gate = c if gate is None else gate | c
-    else:
-        for fname, _ in pairs:
-            for i in range(len(terms)):
-                c = F.col(f"tf_{fname}_{i}") > 0
-                gate = c if gate is None else gate | c
-    return (
-        j.filter(gate)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def multi_match_best_fields_atrest(
-    spark: SparkSession,
-    paths,
-    terms: list[str],
-    boosts,
-    tie_breaker: float = 0.0,
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    indexes: dict | None = None,
-    mm_type: str = "best_fields",
-    operator: str = "or",
-) -> DataFrame:
-    """multi_match served from PER-FIELD at-rest indexes (a field is
-    its own index in ES) — bit-identical to
-    :func:`multi_match_best_fields`. ``paths`` maps field -> index
-    directory ([(field, path), ...] or dict in declaration order);
-    ``boosts`` maps field -> boost; ``indexes`` optionally injects
-    pre-loaded (pidx, doclens, n_buckets) frames per field (the
-    streamed-index form); ``mm_type`` / ``operator`` as in the scan
-    form (operator="and" rides the per-field frames as one boolean
-    column per field — same exchange count; the hit sets the pivots
-    produce are supersets of the AND gate, which filters map-side
-    after the join).
-
-    ONE grouped pivot serves every field and every mm_type (round-14
-    optimization, VERDICT r13 next #9; guide §2.4): the per-field
-    probe hits union into a single (id, field, term, tf) frame and
-    ONE doc-keyed aggregation produces all tf_<field>_<i> columns —
-    replacing the former per-field pivot exchanges plus their
-    full-outer id-join chain with a single id-keyed exchange. Each
-    field's doclens then left-joins dl_<field> (coalesced to 0; a
-    doc absent from a field's hit set has tf=0 everywhere, and BM25
-    at tf=0 is exactly +0.0 regardless of dl — the same value its
-    scan expression yields — so bit-identity with the scan form
-    holds), and each field's 1-row stats / df frames broadcast onto
-    the joined frame. Per-field corpus sizes stay per-field
-    (n_<field>) for the field-centric types; cross_fields carries n
-    once (every field's doclens covers the same corpus). Assumes the
-    write_text_index invariant that a doc with a posting has a
-    doclens row (postings ⊆ doclens)."""
-    from irclogbot_spark.operators.textindex import (
-        postings_tf,
-        probe_postings,
-        read_text_index,
-    )
-
-    if mm_type not in MM_TYPES:
-        raise ValueError(f"unknown multi_match type {mm_type!r}")
-    if operator not in ("or", "and"):
-        raise ValueError(f"unknown multi_match operator {operator!r}")
-    if not terms:
-        raise ValueError("multi_match needs at least one term")
-    _check_no_duplicate_terms(list(terms))
-    path_pairs = list(paths.items()) if isinstance(paths, dict) else list(paths)
-    pairs = _norm_fields([(f, dict(boosts)[f]) for f, _ in path_pairs])
-
-    hit_frames: list[DataFrame] = []
-    dl_frames: list[DataFrame] = []
-    stats_frames: list[DataFrame] = []
-    df_frames: list[DataFrame] = []
-    for fi, (fname, path) in enumerate(path_pairs):
-        pidx, doclens, n_buckets = (
-            indexes[fname]
-            if indexes is not None and fname in indexes
-            else read_text_index(spark, path)
+        score = (
+            _dis_max(scores, tie_breaker)
+            if mm_type == "best_fields"
+            else fixed_sum(scores)
         )
-        p = postings_tf(probe_postings(pidx, list(terms), n_buckets), id_col)
-        hit_frames.append(
-            p.select(F.col(id_col), F.lit(fi).alias("_f"), "term", "tf")
-        )
-        dfreq = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        dfrow = dfreq.groupBy().pivot("term", list(terms)).agg(F.first("df"))
-        dfrow = dfrow.select(
-            *[
-                F.coalesce(F.col(f"`{t}`"), F.lit(0)).alias(f"df_{fname}_{i}")
-                for i, t in enumerate(terms)
-            ]
-        )
-        # every field's doclens covers the whole corpus, so
-        # cross_fields carries n once (first field); the field-
-        # centric types keep their own copy as n_<field> (field
-        # scores are self-contained)
-        stat_cols = [
-            (F.sum("dl").cast("double") / F.count(F.lit(1))).alias(
-                f"avgdl_{fname}"
-            )
-        ]
-        if mm_type != "cross_fields":
-            stat_cols.append(F.count(F.lit(1)).alias(f"n_{fname}"))
-        elif fi == 0:
-            stat_cols.append(F.count(F.lit(1)).alias("n"))
-        stats_frames.append(doclens.agg(*stat_cols))
-        df_frames.append(dfrow)
-        dl_frames.append(
-            doclens.select(F.col(id_col), F.col("dl").alias(f"dl_{fname}"))
-        )
-    hits = hit_frames[0]
-    for nxt in hit_frames[1:]:
-        hits = hits.unionByName(nxt)
-    # ONE doc-keyed pivot for all fields: the union hit set IS the
-    # union of the per-field hit sets, and a (field, term) the doc
-    # missed aggregates to the same coalesced 0 the per-field pivots
-    # produced
-    joined = hits.groupBy(id_col).agg(
-        *[
-            F.coalesce(
-                F.max(
-                    F.when(
-                        (F.col("_f") == fi) & (F.col("term") == t), F.col("tf")
-                    )
-                ),
-                F.lit(0),
-            ).alias(f"tf_{fname}_{i}")
-            for fi, (fname, _) in enumerate(path_pairs)
-            for i, t in enumerate(terms)
-        ]
-    )
-    for fi, (fname, _) in enumerate(path_pairs):
-        joined = joined.join(dl_frames[fi], id_col, "left").withColumn(
-            f"dl_{fname}", F.coalesce(F.col(f"dl_{fname}"), F.lit(0))
-        )
-    for s in stats_frames:
-        joined = joined.join(F.broadcast(s))
-    for d in df_frames:
-        joined = joined.join(F.broadcast(d))
-    if mm_type == "cross_fields":
-        if operator == "and":
-            # term-centric AND over the joined raw frame: every term
-            # present in >= 1 field (the scan gate, verbatim)
-            gate = None
-            for i in range(len(terms)):
-                c = None
-                for fname, _ in pairs:
-                    t = F.col(f"tf_{fname}_{i}") > 0
-                    c = t if c is None else c | t
-                gate = c if gate is None else gate & c
-            joined = joined.filter(gate)
-        return (
-            joined.select(
-                F.col(id_col),
-                _cross_fields_score(pairs, len(terms), k1, b, tie_breaker).alias(
-                    "score"
-                ),
-            )
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
-        )
-    # field-centric types: per-field scores as map-side expressions
-    # over the shared joined frame — a doc absent from a field has
-    # tf=0 everywhere there, so its per-term BM25 is exactly +0.0,
-    # the value the former coalesce(score_<field>, 0.0) supplied
-    scores = []
-    matches = []
-    for fname, boost in pairs:
-        s = _field_score(fname, boost, len(terms), k1, b, n_col=f"n_{fname}")
-        if operator == "and":
-            fm = None
-            for i in range(len(terms)):
-                t = F.col(f"tf_{fname}_{i}") > 0
-                fm = t if fm is None else fm & t
-            s = F.when(fm, s).otherwise(F.lit(0.0))
-            matches.append(fm)
-        scores.append(s)
-    if operator == "and":
-        # some field matched ALL terms (a doc absent from a field's
-        # hit set has tf=0 there and cannot match it)
-        gate = None
-        for fm in matches:
-            gate = fm if gate is None else gate | fm
-        joined = joined.filter(gate)
-    return (
-        joined.select(
-            F.col(id_col),
-            _combine_fields(scores, mm_type, tie_breaker).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return top_k(j.filter(gate), score, id_col, k)
 
 
 def match_phrase_prefix(
-    df: DataFrame,
+    src,
     terms: list[str],
     prefix: str,
-    max_expansions: int = 50,
+    max_expansions: int | None = 50,
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Scan-form match_phrase_prefix: top-k (id_col, phrase_count)
-    of docs containing the fixed ``terms`` followed by a token
-    starting with ``prefix``, counting only the first
-    ``max_expansions`` prefix expansions in term order (ES's
-    dictionary-order expansion cap). ``terms`` may be empty — the
-    pure prefix query, ES's single-partial-term search box."""
+    """match_phrase_prefix: top-k (id_col, phrase_count) of docs
+    containing the fixed ``terms`` followed by a token starting with
+    ``prefix``, counting only the first ``max_expansions`` prefix
+    expansions in term order (ES's dictionary-order expansion cap;
+    None expands every match). ``terms`` may be empty — the pure
+    prefix query, ES's single-partial-term search box."""
     if not prefix:
         raise ValueError("match_phrase_prefix needs a non-empty prefix")
-    if max_expansions is not None and max_expansions <= 0:
-        raise ValueError(f"max_expansions must be > 0, got {max_expansions}")
     terms = list(terms or [])
-    m = len(terms) + 1
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(WORD_RE), F.lit(0))
-
-    # the expansion set: prefix-matching term types in term order,
-    # cut to max_expansions — term-type-sized before the cut
-    expansions = (
-        df.select(F.explode(F.array_distinct(toks)).alias("term"))
-        .filter(F.col("term").startswith(prefix))
-        .distinct()
-    )
-    if max_expansions is not None:
-        expansions = expansions.orderBy("term").limit(int(max_expansions))
-
-    # candidate starts, fully in-row: positions i where toks[i..i+m-2]
-    # equals the fixed terms and toks[i+m-1] starts with the prefix;
-    # only matched (id, last_token) pairs leave the row. sequence()
-    # runs DESCENDING for n < 1, so short docs guard to empty
-    # explicitly (the phrase_count_col convention).
-    starts = F.when(
-        F.size(toks) >= m, F.sequence(F.lit(1), F.size(toks) - m + 1)
-    ).otherwise(F.array().cast("array<int>"))
-
-    def _cand(i):
-        cond = F.element_at(toks, i + m - 1).startswith(prefix)
-        if terms:
-            target = F.array(*[F.lit(t) for t in terms])
-            cond = (F.slice(toks, i, m - 1) == target) & cond
-        return cond
-
-    lasts = df.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(F.filter(starts, _cand), lambda i: F.element_at(toks, i + m - 1))
-        ).alias("_last"),
-    )
-    return (
-        lasts.join(F.broadcast(expansions), lasts["_last"] == expansions["term"])
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("phrase_count"))
-        .orderBy(F.desc("phrase_count"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def match_phrase_prefix_atrest(
-    spark: SparkSession,
-    path: str,
-    terms: list[str],
-    prefix: str,
-    max_expansions: int = 50,
-    k: int = 10,
-    id_col: str = "doc_id",
-    index: tuple | None = None,
-) -> DataFrame:
-    """match_phrase_prefix served from the at-rest positional index —
-    bit-identical counts to :func:`match_phrase_prefix`. The
-    expansion walks the vocab sidecar (the term-dictionary walk —
-    the fuzzy_term_search_atrest pruning boundary) and collects the
-    <= max_expansions matched types (an enforced bound, the r11
-    fuzzy convention); only the fixed terms' + expanded terms'
-    postings are fetched, bucket-pruned. Position intersection is
-    the phrase_search_indexed algorithm with the last offset tested
-    against the union of expansion position lists."""
-    from irclogbot_spark.operators.textindex import (
-        probe_postings,
-        read_text_index,
-        read_vocab,
-    )
-
-    if not prefix:
-        raise ValueError("match_phrase_prefix needs a non-empty prefix")
-    if max_expansions is not None and max_expansions <= 0:
-        raise ValueError(f"max_expansions must be > 0, got {max_expansions}")
-    terms = list(terms or [])
-    m = len(terms) + 1
-    if index is not None:
-        pidx, _doclens, n_buckets = index
-        vocab = (
-            pidx.select("term").distinct()
-        )  # streamed frames carry no vocab sidecar; term types only
-    else:
-        pidx, _doclens, n_buckets = read_text_index(spark, path)
-        vocab = read_vocab(spark, path)
-    exp = vocab.select("term").filter(F.col("term").startswith(prefix)).distinct()
-    if max_expansions is not None:
-        exp = exp.orderBy("term").limit(int(max_expansions))
-    expanded = [r[0] for r in exp.collect()]  # bounded: <= max_expansions
-    probe = list(dict.fromkeys(terms + expanded))
-    if not probe:  # empty prefix expansion with no fixed terms
-        return pidx.select(
+    s = source(src, [text_col])
+    expanded = expand_terms(s.vocab(), [prefix], max_expansions)
+    if not expanded:
+        return s.docs.select(
             F.col(id_col), F.lit(0).cast("long").alias("phrase_count")
         ).limit(0)
-    p = probe_postings(pidx, probe, n_buckets)
-    aggs = [
-        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"ps{j}")
-        for j, t in enumerate(terms)
-    ]
-    aggs.append(
-        F.flatten(
-            F.collect_list(
-                F.when(F.col("term").isin(expanded), F.col("positions"))
-            )
-        ).alias("exp_pos")
-    )
-    per_doc = p.groupBy(id_col).agg(*aggs)
-    for j in range(len(terms)):
-        per_doc = per_doc.filter(F.col(f"ps{j}").isNotNull())
-    per_doc = per_doc.filter(F.size("exp_pos") > 0)
-    if terms:
-
-        def _start_ok(pos):
-            cond = F.array_contains(F.col("exp_pos"), pos + m - 1)
-            for j in range(1, len(terms)):
-                cond = F.array_contains(F.col(f"ps{j}"), pos + j) & cond
-            return cond
-
-        count = F.size(F.filter(F.col("ps0"), _start_ok))
-    else:
-        count = F.size("exp_pos")
     return (
-        per_doc.select(
-            F.col(id_col), count.cast("long").alias("phrase_count")
-        )
+        s.phrase_prefix(terms, expanded, id_col)
         .filter(F.col("phrase_count") > 0)
         .orderBy(F.desc("phrase_count"), F.asc(id_col))
         .limit(k)

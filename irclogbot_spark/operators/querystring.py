@@ -32,11 +32,11 @@ never-raise contract — malformed input degrades to plain terms):
   never-throws contract belongs to the search-box entry points)
 
 The compiled query IS a :mod:`irclogbot_spark.operators.boolquery`
-bool query — the parser produces (must, should, must_not) and both
-physical forms reuse bool_search / bool_search_atrest verbatim, so
-scan and at-rest stay bit-identical and every scale property
-(zero-shuffle scan, bucket-pruned at-rest probe) is inherited, not
-reimplemented.
+bool query — the parser produces (must, should, must_not), prefixes
+expand against the source's term dictionary, and bool_search runs
+over the same term source (operators/termsource.py), so the scan and
+index sources stay bit-identical and every scale property is
+inherited, not reimplemented.
 
 Reference parity note: the reference bot has no query parser (it is
 an ingest bot; irclogbot.py:50-51 only writes to ES) — this is the
@@ -46,10 +46,11 @@ query family.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from irclogbot_spark.functions.text import WORD_RE
+from irclogbot_spark.operators.boolquery import bool_search
+from irclogbot_spark.operators.termsource import expand_terms, source
 
 
 def parse_simple_query(query: str) -> dict:
@@ -104,42 +105,8 @@ def parse_simple_query(query: str) -> dict:
     }
 
 
-def _expand_prefixes(
-    vocab_terms: DataFrame,
-    prefixes: list[str],
-    exclude: set[str],
-    max_expansions: int,
-) -> list[str]:
-    """Expand each prefix stem against a (term) frame in TERM ORDER,
-    capped PER PREFIX at max_expansions (the ES knob is per prefix
-    clause). Terms already referenced by another clause (or by an
-    earlier prefix) are excluded BEFORE the cap (round 13, per ADVICE
-    r12: exclusion after the cap silently shrank the expansion below
-    max_expansions even when more dictionary matches existed), so a
-    prefix always yields the full max_expansions distinct new terms
-    when the dictionary has them. Documented deviation from ES: the
-    excluded term itself loses the extra should-clause score real ES
-    would add for the duplicate clause — the engine's
-    no-duplicate-terms contract (boolquery._check_no_duplicate_terms)
-    keeps each term a single clause."""
-    out: list[str] = []
-    for p in prefixes:
-        skip = set(exclude) | set(out)
-        exp = vocab_terms.filter(F.col("term").startswith(p))
-        if skip:
-            exp = exp.filter(~F.col("term").isin(sorted(skip)))
-        exp = (
-            exp.select("term")
-            .distinct()
-            .orderBy("term")
-            .limit(int(max_expansions))
-        )
-        out.extend(r[0] for r in exp.collect())  # bounded: <= max_expansions
-    return out
-
-
 def simple_query_string_search(
-    df: DataFrame,
+    src,
     query: str,
     max_expansions: int = 50,
     k: int = 10,
@@ -148,104 +115,28 @@ def simple_query_string_search(
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
-    """Scan-form simple_query_string: parse, expand prefixes against
-    the corpus term types (term order, capped — a term-type-sized
-    distinct, the match_phrase_prefix convention), and run the
-    compiled bool query. Output/ordering contract = bool_search's
-    (id, score, n_should). A query with no surviving positive clause
-    (only must_not terms, or prefixes expanding to nothing) returns
-    the empty frame — ES's empty-hits response, never an error
-    (round 13, per ADVICE r12)."""
-    from irclogbot_spark.operators.boolquery import bool_search
-
+    """simple_query_string over either term source: parse, expand
+    prefixes against the source's term dictionary (term order, capped
+    per prefix, already-referenced terms excluded before the cap —
+    termsource.expand_terms), and run the compiled bool query.
+    Output/ordering contract = bool_search's (id, score, n_should). A
+    query with no surviving positive clause (only must_not terms, or
+    prefixes expanding to nothing) returns the empty frame — ES's
+    empty-hits response, never an error (round 13, per ADVICE r12)."""
     clauses = parse_simple_query(query)
-    should = list(clauses["should"])
+    must, should, must_not = clauses["must"], clauses["should"], clauses["must_not"]
+    s = source(src, [text_col])
     if clauses["prefixes"]:
-        toks = F.regexp_extract_all(F.col(text_col), F.lit(WORD_RE), F.lit(0))
-        vocab = df.select(
-            F.explode(F.array_distinct(toks)).alias("term")
-        ).distinct()
-        referenced = set(
-            clauses["must"] + should + clauses["must_not"]
+        should = should + expand_terms(
+            s.vocab(), clauses["prefixes"], max_expansions,
+            exclude=set(must + should + must_not),
         )
-        should += _expand_prefixes(
-            vocab, clauses["prefixes"], referenced, max_expansions
-        )
-    if not clauses["must"] and not should:
-        return df.select(
+    if not must and not should:
+        return s.docs.select(
             F.col(id_col),
             F.lit(0.0).alias("score"),
             F.lit(0).cast("long").alias("n_should"),
         ).limit(0)
     return bool_search(
-        df,
-        must=clauses["must"],
-        should=should or None,
-        must_not=clauses["must_not"] or None,
-        k=k,
-        id_col=id_col,
-        text_col=text_col,
-        k1=k1,
-        b=b,
-    )
-
-
-def simple_query_string_atrest(
-    spark: SparkSession,
-    path: str,
-    query: str,
-    max_expansions: int = 50,
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
-    index: tuple | None = None,
-) -> DataFrame:
-    """simple_query_string served from the at-rest index: prefix
-    expansion walks the vocab sidecar (the term-dictionary walk —
-    the fuzzy/match_phrase_prefix pruning boundary), then the
-    compiled bool query runs through bool_search_atrest —
-    bit-identical to the scan form, including the empty-hits
-    response when no positive clause survives (the empty frame's id
-    rows come from the narrow doclens table — no postings read)."""
-    from irclogbot_spark.operators.boolquery import bool_search_atrest
-    from irclogbot_spark.operators.textindex import (
-        read_text_index,
-        read_vocab,
-    )
-
-    clauses = parse_simple_query(query)
-    should = list(clauses["should"])
-    if clauses["prefixes"]:
-        vocab = (
-            index[0].select("term").distinct()
-            if index is not None
-            else read_vocab(spark, path)
-        )
-        referenced = set(
-            clauses["must"] + should + clauses["must_not"]
-        )
-        should += _expand_prefixes(
-            vocab, clauses["prefixes"], referenced, max_expansions
-        )
-    if not clauses["must"] and not should:
-        doclens = (
-            index[1] if index is not None else read_text_index(spark, path)[1]
-        )
-        return doclens.select(
-            F.col(id_col),
-            F.lit(0.0).alias("score"),
-            F.lit(0).cast("long").alias("n_should"),
-        ).limit(0)
-    return bool_search_atrest(
-        spark,
-        path,
-        must=clauses["must"],
-        should=should or None,
-        must_not=clauses["must_not"] or None,
-        k=k,
-        id_col=id_col,
-        k1=k1,
-        b=b,
-        index=index,
+        s, must, should, must_not, k=k, id_col=id_col, text_col=text_col, k1=k1, b=b
     )

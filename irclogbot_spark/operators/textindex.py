@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import zlib
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +39,22 @@ from pyspark.sql import functions as F
 from irclogbot_spark.functions.text import build_positional_index
 
 META_NAME = "_text_index_meta.json"
+
+
+class TextIndex(NamedTuple):
+    """A loaded text index: what :func:`read_text_index` returns for
+    the one-shot artifact and streaming/textindex.py ``load_text``
+    for a streamed one — the index term source of the ES query family
+    (operators/termsource.py). ``vocab`` is the (term, df) term
+    dictionary; ``stored`` optionally attaches the stored fields (id
+    plus doc-value columns) that terms_set / function_score read,
+    e.g. ``idx._replace(stored=corpus.select("doc_id", "n_chars"))``."""
+
+    postings: DataFrame
+    doclens: DataFrame
+    n_buckets: int
+    vocab: DataFrame
+    stored: DataFrame | None = None
 
 
 def py_term_bucket(term: str, n_buckets: int) -> int:
@@ -96,11 +113,9 @@ def write_text_index(
     invalidate_scan(path)
 
 
-def read_text_index(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """(positional postings, doclens, n_buckets) from an at-rest
-    index. Scans are memoized per (application, path) — every
+def read_text_index(spark: SparkSession, path: str) -> TextIndex:
+    """(positional postings, doclens, n_buckets, vocab sidecar) from
+    an at-rest index. Scans are memoized per (application, path) — every
     at-rest probe re-read the artifact's footers/listing on every
     call (~0.18 s/artifact; round-13 optimization). write_text_index
     invalidates the memo when it rewrites a path."""
@@ -108,10 +123,11 @@ def read_text_index(
 
     with open(os.path.join(path, META_NAME)) as f:
         meta = json.load(f)
-    return (
+    return TextIndex(
         memo_scan(spark, os.path.join(path, "postings")),
         memo_scan(spark, os.path.join(path, "doclens")),
         int(meta["n_buckets"]),
+        read_vocab(spark, path),
     )
 
 
@@ -180,8 +196,7 @@ def fuzzy_term_search_atrest(
     shape."""
     if not terms:
         raise ValueError("need at least one term")
-    pidx, _lens, n_buckets = read_text_index(spark, path)
-    vocab = read_vocab(spark, path)
+    pidx, _lens, n_buckets, vocab = read_text_index(spark, path)[:4]
     tdf = spark.createDataFrame([(t,) for t in terms], "term string")
     dist = F.levenshtein(F.col("tok"), F.col("term"), max_dist)
     matches = (
@@ -241,8 +256,7 @@ def more_like_this_atrest(
 
     if not query_ids:
         raise ValueError("need at least one query doc id")
-    pidx, lens, n_buckets = read_text_index(spark, path)
-    vocab = read_vocab(spark, path)
+    pidx, lens, n_buckets, vocab = read_text_index(spark, path)[:4]
     ids = [int(i) for i in query_ids]
     qpostings, _ = build_text_index(
         corpus.filter(F.col(id_col).isin(ids)), id_col, text_col
@@ -349,7 +363,7 @@ def bm25_search_after_atrest(
     Returns (id_col, score) — the bm25 ranking shape."""
     from irclogbot_spark.functions.text import bm25_scores_indexed
 
-    pidx, doclens, n_buckets = read_text_index(spark, path)
+    pidx, doclens, n_buckets = read_text_index(spark, path)[:3]
     scored = bm25_scores_indexed(
         postings_tf(probe_postings(pidx, terms, n_buckets), id_col),
         doclens,

@@ -3006,8 +3006,8 @@ ORDER BY s.score DESC, s.doc_id LIMIT 10
 # (msm=1), must_not 'dup', filter dl BETWEEN 20 AND 120. Score = the
 # BM25 per-term contributions of must + should terms in declaration
 # order (tf=0 should terms contribute exactly 0.0); gates are
-# non-scoring. Mirrors operators/boolquery.py bool_search /
-# bool_search_atrest — two physical paths, one value hash.
+# non-scoring. Mirrors operators/boolquery.py bool_search over
+# either term source — two physical paths, one value hash.
 _BOOL_TERM = (
     "((CAST(n - df{i} AS DOUBLE) + 0.5) / (df{i} + 0.5))"
     " * ((tf{i} * CAST(1.2 + 1.0 AS DOUBLE))"
@@ -3188,7 +3188,7 @@ ORDER BY score DESC, id LIMIT 10
 # tie_breaker 0.3. Per-FIELD BM25 (each field has its own dl/avgdl/
 # df — a field is its own corpus), fixed-order per-field sums times
 # the boost, dis_max combine max + 0.3*(sum - max). Mirrors
-# operators/multimatch.py multi_match_best_fields — two physical
+# operators/multimatch.py multi_match — two physical
 # paths (scan + per-field at-rest indexes), one value hash.
 _MM_TERM = (
     "((CAST(n - df_{f}_{i} AS DOUBLE) + 0.5) / (df_{f}_{i} + 0.5))"
@@ -3242,7 +3242,7 @@ ORACLES["docs_multi_match_atrest"] = ORACLES["docs_multi_match"]
 # ES multi_match type=most_fields (round 12): same per-field frame,
 # score = the PLAIN fixed-order sum of the boosted per-field BM25
 # scores (ES compiles most_fields to a bool should over the
-# per-field matches). Mirrors multi_match_best_fields(mm_type=
+# per-field matches). Mirrors multi_match(mm_type=
 # 'most_fields') — two physical paths, one value hash.
 ORACLES["docs_multi_match_most_fields"] = rf"""
 WITH t AS (
@@ -3291,7 +3291,7 @@ ORACLES["docs_multi_match_most_fields_atrest"] = ORACLES[
 # BlendedTermQuery), the term scores in every field with that shared
 # df (own dl/avgdl norm, own boost), fields combine per term as the
 # dis_max (tie_breaker 0 = pure max), terms sum in declaration
-# order. Mirrors multi_match_best_fields(mm_type='cross_fields') —
+# order. Mirrors multi_match(mm_type='cross_fields') —
 # two physical paths, one value hash.
 _MM_XTERM = (
     "((CAST(n - {df} AS DOUBLE) + 0.5) / ({df} + 0.5))"
@@ -3353,7 +3353,7 @@ ORACLES["docs_multi_match_cross_fields_atrest"] = ORACLES[
 # compiles with operator=and); a non-matching field contributes
 # exactly 0.0 to the dis_max; the doc matches when >= 1 field fully
 # matches. Same frame as docs_multi_match with a gated score and a
-# tightened gate — mirrors multi_match_best_fields(operator='and').
+# tightened gate — mirrors multi_match(operator='and').
 ORACLES["docs_multi_match_operator_and"] = rf"""
 WITH t AS (
   SELECT doc_id, regexp_extract_all(text, '\S+') AS btoks FROM documents
@@ -3550,8 +3550,8 @@ ORACLES["docs_simple_query_string_atrest"] = ORACLES["docs_simple_query_string"]
 # ES terms_set query (round 12): four searched terms, required
 # count from the per-doc field 1 + n_chars % 3, clamped >= 1; score
 # = fixed-order BM25 sum of matching terms. Mirrors
-# operators/boolquery.py terms_set_search / _atrest — two physical
-# paths, one value hash.
+# operators/boolquery.py terms_set_search over either term source —
+# two physical paths, one value hash.
 ORACLES["docs_terms_set"] = rf"""
 WITH t AS (
   SELECT doc_id, n_chars, regexp_extract_all(text, '\S+') AS toks
@@ -3663,8 +3663,8 @@ ORACLES["docs_span_not_atrest"] = ORACLES["docs_span_not"]
 # fixed token '{{"k":' followed by a token starting with '5' — the
 # k=50..59 payload messages. Prefix expansion in TERM ORDER capped
 # at max_expansions=50; counts are start positions (overlaps
-# included). Mirrors operators/multimatch.py match_phrase_prefix /
-# match_phrase_prefix_atrest — two physical paths, one value hash.
+# included). Mirrors operators/multimatch.py match_phrase_prefix over
+# either term source — two physical paths, one value hash.
 ORACLES["log_match_phrase_prefix"] = (
     "WITH " + IRCLOG_CTE + r""",
 t AS (

@@ -5030,7 +5030,7 @@ def docs_phrase_search_atrest(spark, sf_dir):
     from irclogbot_spark.functions.text import phrase_search_indexed
     from irclogbot_spark.operators.textindex import probe_postings
 
-    pidx, _lens, n_buckets = _text_index_at_rest(spark, sf_dir)
+    pidx, _lens, n_buckets = _text_index_at_rest(spark, sf_dir)[:3]
     probed = probe_postings(pidx, _PHRASE, n_buckets)
     return phrase_search_indexed(probed, _PHRASE)
 
@@ -5069,7 +5069,7 @@ def docs_prefix_suggest_atrest(spark, sf_dir):
     queued for the round-11 window."""
     from irclogbot_spark.operators.textindex import prefix_suggest_atrest
 
-    _pidx, _lens, _nb = _text_index_at_rest(spark, sf_dir)
+    _text_index_at_rest(spark, sf_dir)
     return prefix_suggest_atrest(spark, _TEXT_INDEX[sf_dir], "s", k=10)
 
 
@@ -5091,7 +5091,7 @@ def docs_fuzzy_term_search_atrest(spark, sf_dir):
     registration; queued for the round-11 window."""
     from irclogbot_spark.operators.textindex import fuzzy_term_search_atrest
 
-    _pidx, _lens, _nb = _text_index_at_rest(spark, sf_dir)
+    _text_index_at_rest(spark, sf_dir)
     return fuzzy_term_search_atrest(
         spark, _TEXT_INDEX[sf_dir], _FUZZY_TERMS, max_dist=1, max_expansions=None
     )
@@ -5109,7 +5109,7 @@ def docs_more_like_this_atrest(spark, sf_dir):
     round-11 window."""
     from irclogbot_spark.operators.textindex import more_like_this_atrest
 
-    _pidx, _lens, _nb = _text_index_at_rest(spark, sf_dir)
+    _text_index_at_rest(spark, sf_dir)
     return more_like_this_atrest(
         spark,
         _TEXT_INDEX[sf_dir],
@@ -5141,7 +5141,7 @@ def docs_bm25_atrest(spark, sf_dir):
         probe_postings,
     )
 
-    pidx, doclens, n_buckets = _text_index_at_rest(spark, sf_dir)
+    pidx, doclens, n_buckets = _text_index_at_rest(spark, sf_dir)[:3]
     probed = probe_postings(pidx, ["the", "data"], n_buckets)
     return bm25_rank_indexed(postings_tf(probed), doclens, ["the", "data"], k=10)
 
@@ -5216,19 +5216,19 @@ def docs_bool_search(spark, sf_dir):
 @query("docs_bool_search_atrest")
 def docs_bool_search_atrest(spark, sf_dir):
     """The same bool query served from the AT-REST index (round 11 —
-    operators/boolquery.py bool_search_atrest): ONE bucket-pruned
-    postings probe covers all four referenced terms (the must_not
-    term's postings are read bucket-pruned and become the exclusion
-    column of the per-doc pivot — the corpus text is never touched),
+    operators/boolquery.py bool_search over the index source): ONE
+    bucket-pruned postings probe covers all four referenced terms
+    (the must_not term's postings are read bucket-pruned and become
+    the exclusion column of the per-doc pivot — the corpus text is
+    never touched),
     dl joins from the narrow doclens table, stats + per-term df
     broadcast. Bit-identical scores to the scan form — second
     physical path on the bool oracle, one value hash. Tail
     registration; first driver row queued for the round-12
     window."""
-    from irclogbot_spark.operators.boolquery import bool_search_atrest
+    from irclogbot_spark.operators.boolquery import bool_search
 
-    _text_index_at_rest(spark, sf_dir)
-    return bool_search_atrest(spark, _TEXT_INDEX[sf_dir], **_BOOL_CLAUSES)
+    return bool_search(_text_index_at_rest(spark, sf_dir), **_BOOL_CLAUSES)
 
 
 @query("docs_dis_max_search")
@@ -5260,12 +5260,10 @@ def docs_dis_max_search_atrest(spark, sf_dir):
     dl from doclens, stats/df broadcast) under the dis_max scorer —
     second physical path, one value hash. Tail registration; first
     driver row queued for the round-12 window."""
-    from irclogbot_spark.operators.boolquery import dis_max_search_atrest
+    from irclogbot_spark.operators.boolquery import dis_max_search
 
-    _text_index_at_rest(spark, sf_dir)
-    return dis_max_search_atrest(
-        spark,
-        _TEXT_INDEX[sf_dir],
+    return dis_max_search(
+        _text_index_at_rest(spark, sf_dir),
         ["scan", "merge", "vector"],
         tie_breaker=0.3,
         k=10,
@@ -5299,12 +5297,10 @@ def docs_boosting_search_atrest(spark, sf_dir):
     the negative term's postings read bucket-pruned into the pivot's
     demotion column — second physical path, one value hash. Tail
     registration; first driver row queued for the round-12 window."""
-    from irclogbot_spark.operators.boolquery import boosting_search_atrest
+    from irclogbot_spark.operators.boolquery import boosting_search
 
-    _text_index_at_rest(spark, sf_dir)
-    return boosting_search_atrest(
-        spark,
-        _TEXT_INDEX[sf_dir],
+    return boosting_search(
+        _text_index_at_rest(spark, sf_dir),
         positive=["batch", "window"],
         negative=["slow"],
         negative_boost=0.5,
@@ -5336,18 +5332,14 @@ def docs_constant_score(spark, sf_dir):
 @query("docs_constant_score_atrest")
 def docs_constant_score_atrest(spark, sf_dir):
     """docs_constant_score from the AT-REST index (round 11): the
-    all-terms gate is a bucket-pruned postings probe + one doc-keyed
-    distinct-term count (no tf, no stats), the dl clause a doclens
-    semi-join — second physical path, one value hash. Tail
+    all-terms gate reads the stats-free term frame (a bucket-pruned
+    postings probe, one doc-keyed pivot, dl from doclens) — second
+    physical path, one value hash. Tail
     registration; first driver row queued for the round-12 window."""
-    from irclogbot_spark.operators.boolquery import (
-        constant_score_search_atrest,
-    )
+    from irclogbot_spark.operators.boolquery import constant_score_search
 
-    _text_index_at_rest(spark, sf_dir)
-    return constant_score_search_atrest(
-        spark,
-        _TEXT_INDEX[sf_dir],
+    return constant_score_search(
+        _text_index_at_rest(spark, sf_dir),
         ["data", "merge"],
         boost=1.5,
         dl_between=(20, 120),
@@ -5394,15 +5386,11 @@ def docs_function_score_atrest(spark, sf_dir):
     collapse_atrest convention) — second physical path, one value
     hash. Tail registration; first driver row queued for the
     round-12 window."""
-    from irclogbot_spark.operators.boolquery import (
-        function_score_search_atrest,
-    )
+    from irclogbot_spark.operators.boolquery import function_score_search
 
-    _text_index_at_rest(spark, sf_dir)
-    return function_score_search_atrest(
-        spark,
-        _TEXT_INDEX[sf_dir],
-        _t(spark, sf_dir, "documents"),
+    idx = _text_index_at_rest(spark, sf_dir)
+    return function_score_search(
+        idx._replace(stored=_t(spark, sf_dir, "documents")),
         ["data", "batch"],
         _FSCORE_FUNCS,
         k=10,
@@ -5528,7 +5516,7 @@ def docs_collapse_by_source_atrest(spark, sf_dir):
         probe_postings,
     )
 
-    pidx, doclens, n_buckets = _text_index_at_rest(spark, sf_dir)
+    pidx, doclens, n_buckets = _text_index_at_rest(spark, sf_dir)[:3]
     scored = bm25_scores_indexed(
         postings_tf(probe_postings(pidx, ["the", "data"], n_buckets)),
         doclens,
@@ -5621,11 +5609,22 @@ _MM_TERMS = ["spark", "merge"]
 _MM_FIELDS = [("title", 2.0), ("text", 1.0)]
 
 
+def _field_indexes_at_rest(spark, sf_dir):
+    """One at-rest index per _MM_FIELDS field (a field is its own
+    index in ES): the title index plus the session text index."""
+    from irclogbot_spark.operators.textindex import read_text_index
+
+    return {
+        "title": read_text_index(spark, _title_index_at_rest(spark, sf_dir)),
+        "text": _text_index_at_rest(spark, sf_dir),
+    }
+
+
 @query("docs_multi_match")
 def docs_multi_match(spark, sf_dir):
     """ES multi_match type=best_fields (round 12 — §2H's last
     high-traffic retrieval gap, VERDICT r11 next #2;
-    operators/multimatch.py multi_match_best_fields): 'spark merge'
+    operators/multimatch.py multi_match): 'spark merge'
     over title^2 (synthesized first-8-tokens short field) and
     text^1, tie_breaker 0.3. Each field scores the fixed-order BM25
     sum under ITS OWN statistics (per-field dl/avgdl/df — a field is
@@ -5635,12 +5634,12 @@ def docs_multi_match(spark, sf_dir):
     map-side combine, partial TakeOrdered — zero corpus shuffles
     (plan-pinned). Round-12 registration; leads the r12 driver
     window."""
-    from irclogbot_spark.operators.multimatch import multi_match_best_fields
+    from irclogbot_spark.operators.multimatch import multi_match
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", _doc_title_col().alias("title"), "text"
     )
-    return multi_match_best_fields(
+    return multi_match(
         docs, _MM_TERMS, _MM_FIELDS, tie_breaker=0.3, k=10
     )
 
@@ -5650,23 +5649,20 @@ def docs_multi_match_atrest(spark, sf_dir):
     """docs_multi_match served from PER-FIELD at-rest indexes (round
     12 — a field is its own index in ES: the title field gets its
     own bucketed postings artifact, the text field reuses the
-    session text index): one bucket-pruned probe + hit-sized pivot
-    per field, per-field stats broadcast, per-field score frames
-    full-outer-joined on doc_id (a missing field coalesces to
-    exactly the 0.0 its tf=0 scan expression yields). Bit-identical
+    session text index): one bucket-pruned probe per field, the
+    hits reassembled by ONE doc-keyed pivot, per-field stats
+    broadcast (a doc absent from a field has tf=0 there, exactly
+    the 0.0 its tf=0 scan expression yields). Bit-identical
     scores to the scan form — second physical path, one value hash.
     Round-12 registration; leads the r12 driver window."""
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields_atrest,
-    )
+    from irclogbot_spark.operators.multimatch import multi_match
 
-    _text_index_at_rest(spark, sf_dir)
-    paths = [
-        ("title", _title_index_at_rest(spark, sf_dir)),
-        ("text", _TEXT_INDEX[sf_dir]),
-    ]
-    return multi_match_best_fields_atrest(
-        spark, paths, _MM_TERMS, dict(_MM_FIELDS), tie_breaker=0.3, k=10
+    return multi_match(
+        _field_indexes_at_rest(spark, sf_dir),
+        _MM_TERMS,
+        _MM_FIELDS,
+        tie_breaker=0.3,
+        k=10,
     )
 
 
@@ -5682,10 +5678,9 @@ def log_match_phrase_prefix(spark, sf_dir):
     included). The log is deduplicated to ONE doc per id first — the
     ES sink's keyed upsert (H3) stores each time-free message id
     once, so the searchable corpus has no repeats. Scan shape:
-    term-type-sized expansion, in-row start matching, only matched
-    (id, last_token) pairs leave the row, one broadcast join +
-    hit-sized count agg — message text never shuffles. Round-12
-    registration; leads the r12 driver window."""
+    term-type-sized expansion (a bounded driver-side collect), then
+    in-row start matching and counting — message text never
+    shuffles. Round-12 registration; leads the r12 driver window."""
     from irclogbot_spark.operators.multimatch import match_phrase_prefix
 
     log = (
@@ -5710,12 +5705,11 @@ def log_match_phrase_prefix_atrest(spark, sf_dir):
     against the union of expansion position lists. Bit-identical
     counts to the scan form. Round-12 registration; leads the r12
     driver window."""
-    from irclogbot_spark.operators.multimatch import match_phrase_prefix_atrest
+    from irclogbot_spark.operators.multimatch import match_phrase_prefix
+    from irclogbot_spark.operators.textindex import read_text_index
 
-    path = _log_index_at_rest(spark, sf_dir)
-    return match_phrase_prefix_atrest(
-        spark, path, ['{"k":'], "5", k=10, id_col="id"
-    )
+    idx = read_text_index(spark, _log_index_at_rest(spark, sf_dir))
+    return match_phrase_prefix(idx, ['{"k":'], "5", k=10, id_col="id")
 
 
 @query("docs_multi_match_most_fields")
@@ -5727,12 +5721,12 @@ def docs_multi_match_most_fields(spark, sf_dir):
     dis_max). Same terms/fields/frame as docs_multi_match — one
     different combine expression, same zero-shuffle scan shape. Tail
     registration; queued for the round-13 window."""
-    from irclogbot_spark.operators.multimatch import multi_match_best_fields
+    from irclogbot_spark.operators.multimatch import multi_match
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", _doc_title_col().alias("title"), "text"
     )
-    return multi_match_best_fields(
+    return multi_match(
         docs, _MM_TERMS, _MM_FIELDS, k=10, mm_type="most_fields"
     )
 
@@ -5740,20 +5734,16 @@ def docs_multi_match_most_fields(spark, sf_dir):
 @query("docs_multi_match_most_fields_atrest")
 def docs_multi_match_most_fields_atrest(spark, sf_dir):
     """docs_multi_match_most_fields served from the per-field
-    at-rest indexes — bit-identical (the same full-outer per-field
-    score join, summed instead of dis_max'd). Tail registration;
-    queued for the round-13 window."""
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields_atrest,
-    )
+    at-rest indexes — bit-identical (the same per-field index
+    frame, summed instead of dis_max'd). Tail registration; queued
+    for the round-13 window."""
+    from irclogbot_spark.operators.multimatch import multi_match
 
-    _text_index_at_rest(spark, sf_dir)
-    paths = [
-        ("title", _title_index_at_rest(spark, sf_dir)),
-        ("text", _TEXT_INDEX[sf_dir]),
-    ]
-    return multi_match_best_fields_atrest(
-        spark, paths, _MM_TERMS, dict(_MM_FIELDS), k=10,
+    return multi_match(
+        _field_indexes_at_rest(spark, sf_dir),
+        _MM_TERMS,
+        _MM_FIELDS,
+        k=10,
         mm_type="most_fields",
     )
 
@@ -5772,12 +5762,12 @@ def docs_multi_match_cross_fields(spark, sf_dir):
     map-side expression over the identical zero-shuffle scan frame
     (plan-pinned). Round-13 registration; leads the r13 driver
     window."""
-    from irclogbot_spark.operators.multimatch import multi_match_best_fields
+    from irclogbot_spark.operators.multimatch import multi_match
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", _doc_title_col().alias("title"), "text"
     )
-    return multi_match_best_fields(
+    return multi_match(
         docs, _MM_TERMS, _MM_FIELDS, k=10, mm_type="cross_fields"
     )
 
@@ -5785,24 +5775,19 @@ def docs_multi_match_cross_fields(spark, sf_dir):
 @query("docs_multi_match_cross_fields_atrest")
 def docs_multi_match_cross_fields_atrest(spark, sf_dir):
     """docs_multi_match_cross_fields served from the per-field
-    at-rest indexes (round 13) — bit-identical. The blended df
-    couples terms across fields, so the per-field RAW tf/dl pivots
-    full-outer-join on doc_id (a missing field's tf coalesces to 0,
-    giving exactly the 0.0 its scan expression yields) and each
-    field's 1-row stats/df frames broadcast onto the joined frame —
-    the same exchange count as best_fields_atrest. Round-13
-    registration; leads the r13 driver window."""
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields_atrest,
-    )
+    at-rest indexes (round 13) — bit-identical. The blended df is
+    the greatest of the per-field df columns the shared per-field
+    index frame already carries (a missing field's tf is 0, giving
+    exactly the 0.0 its scan expression yields) — the same exchange
+    count as docs_multi_match_atrest. Round-13 registration; leads
+    the r13 driver window."""
+    from irclogbot_spark.operators.multimatch import multi_match
 
-    _text_index_at_rest(spark, sf_dir)
-    paths = [
-        ("title", _title_index_at_rest(spark, sf_dir)),
-        ("text", _TEXT_INDEX[sf_dir]),
-    ]
-    return multi_match_best_fields_atrest(
-        spark, paths, _MM_TERMS, dict(_MM_FIELDS), k=10,
+    return multi_match(
+        _field_indexes_at_rest(spark, sf_dir),
+        _MM_TERMS,
+        _MM_FIELDS,
+        k=10,
         mm_type="cross_fields",
     )
 
@@ -5818,12 +5803,12 @@ def docs_multi_match_operator_and(spark, sf_dir):
     the operator is a gate/expression change only. Round-13
     registration; queued for the round-14 window (the r13 window
     was committed before this landed)."""
-    from irclogbot_spark.operators.multimatch import multi_match_best_fields
+    from irclogbot_spark.operators.multimatch import multi_match
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", _doc_title_col().alias("title"), "text"
     )
-    return multi_match_best_fields(
+    return multi_match(
         docs, _MM_TERMS, _MM_FIELDS, tie_breaker=0.3, k=10, operator="and"
     )
 
@@ -5831,22 +5816,18 @@ def docs_multi_match_operator_and(spark, sf_dir):
 @query("docs_multi_match_operator_and_atrest")
 def docs_multi_match_operator_and_atrest(spark, sf_dir):
     """docs_multi_match_operator_and served from the per-field
-    at-rest indexes (round 13) — bit-identical: each field's frame
-    carries its all-terms-matched boolean through the full-outer
-    join (same exchange count; the pivot hit sets are supersets of
-    the AND gate, filtered map-side after the join). Round-13
-    registration; queued for the round-14 window."""
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields_atrest,
-    )
+    at-rest indexes (round 13) — bit-identical: the AND gate is a
+    map-side filter over the shared per-field index frame (same
+    exchange count; the pivot hit set is a superset of the gate).
+    Round-13 registration; queued for the round-14 window."""
+    from irclogbot_spark.operators.multimatch import multi_match
 
-    _text_index_at_rest(spark, sf_dir)
-    paths = [
-        ("title", _title_index_at_rest(spark, sf_dir)),
-        ("text", _TEXT_INDEX[sf_dir]),
-    ]
-    return multi_match_best_fields_atrest(
-        spark, paths, _MM_TERMS, dict(_MM_FIELDS), tie_breaker=0.3, k=10,
+    return multi_match(
+        _field_indexes_at_rest(spark, sf_dir),
+        _MM_TERMS,
+        _MM_FIELDS,
+        tie_breaker=0.3,
+        k=10,
         operator="and",
     )
 
@@ -5901,13 +5882,12 @@ def docs_bool_fuzzy_search_atrest(spark, sf_dir):
     term-dictionary walk — the fuzzy_term_search_atrest pruning
     boundary; the sidecar df drives the identical top-frequency
     rewrite), then the compiled bool query runs through
-    bool_search_atrest's bucket-pruned probe — bit-identical to the
+    bool_search's bucket-pruned index probe — bit-identical to the
     scan form. Round-13 registration; leads the r13 driver
     window."""
-    from irclogbot_spark.operators.boolquery import bool_fuzzy_search_atrest
+    from irclogbot_spark.operators.boolquery import bool_fuzzy_search
 
-    _text_index_at_rest(spark, sf_dir)
-    return bool_fuzzy_search_atrest(spark, _TEXT_INDEX[sf_dir], **_BF_KW)
+    return bool_fuzzy_search(_text_index_at_rest(spark, sf_dir), **_BF_KW)
 
 
 #: the declared simple_query_string: one must, two shoulds, one
@@ -5940,16 +5920,15 @@ def docs_simple_query_string(spark, sf_dir):
 @query("docs_simple_query_string_atrest")
 def docs_simple_query_string_atrest(spark, sf_dir):
     """docs_simple_query_string served from the at-rest index (the
-    compiled bool query runs through bool_search_atrest's
+    compiled bool query runs through bool_search's
     bucket-pruned probe) — bit-identical to the scan form. Tail
     registration; queued for the round-13 window."""
     from irclogbot_spark.operators.querystring import (
-        simple_query_string_atrest,
+        simple_query_string_search,
     )
 
-    _text_index_at_rest(spark, sf_dir)
-    return simple_query_string_atrest(
-        spark, _TEXT_INDEX[sf_dir], _SQS_QUERY, k=10
+    return simple_query_string_search(
+        _text_index_at_rest(spark, sf_dir), _SQS_QUERY, k=10
     )
 
 
@@ -5992,13 +5971,11 @@ def docs_terms_set_atrest(spark, sf_dir):
     from a column-pruned corpus fetch — the function_score
     stored-fields convention). Bit-identical to the scan form. Tail
     registration; queued for the round-13 window."""
-    from irclogbot_spark.operators.boolquery import terms_set_search_atrest
+    from irclogbot_spark.operators.boolquery import terms_set_search
 
-    _text_index_at_rest(spark, sf_dir)
-    return terms_set_search_atrest(
-        spark,
-        _TEXT_INDEX[sf_dir],
-        _docs_with_req(spark, sf_dir),
+    idx = _text_index_at_rest(spark, sf_dir)
+    return terms_set_search(
+        idx._replace(stored=_docs_with_req(spark, sf_dir)),
         _TS_TERMS,
         _TS_REQ,
         k=10,
@@ -6033,7 +6010,7 @@ def docs_span_first_atrest(spark, sf_dir):
     from irclogbot_spark.functions.text import span_first_search
     from irclogbot_spark.operators.textindex import probe_postings
 
-    pidx, _lens, n_buckets = _text_index_at_rest(spark, sf_dir)
+    pidx, _lens, n_buckets = _text_index_at_rest(spark, sf_dir)[:3]
     probed = probe_postings(pidx, ["slow", "hash"], n_buckets)
     return span_first_search(probed, ["slow", "hash"], end=20, slop=1)
 
@@ -6069,7 +6046,7 @@ def docs_span_not_atrest(spark, sf_dir):
     from irclogbot_spark.functions.text import span_not_search
     from irclogbot_spark.operators.textindex import probe_postings
 
-    pidx, _lens, n_buckets = _text_index_at_rest(spark, sf_dir)
+    pidx, _lens, n_buckets = _text_index_at_rest(spark, sf_dir)[:3]
     probed = probe_postings(pidx, ["slow", "hash", "scan"], n_buckets)
     return span_not_search(
         probed, ["slow", "hash"], ["scan"], slop=1, pre=1, post=1
@@ -6104,7 +6081,7 @@ def docs_span_near_atrest(spark, sf_dir):
     from irclogbot_spark.functions.text import span_near_search
     from irclogbot_spark.operators.textindex import probe_postings
 
-    pidx, _lens, n_buckets = _text_index_at_rest(spark, sf_dir)
+    pidx, _lens, n_buckets = _text_index_at_rest(spark, sf_dir)[:3]
     probed = probe_postings(pidx, _PHRASE, n_buckets)
     return span_near_search(probed, _PHRASE, slop=2)
 

@@ -14,10 +14,9 @@ a crc32 term bucket — no shuffle, no state). Doclens rows (one per
 doc) ride their own batch partitions under the same overwrite-own-
 partition idempotence; BM25's integer dl-sum re-aggregates them at
 probe time, so the stream needs no running aggregate state.
-``load_text`` plugs straight into probe_postings / postings_tf +
-bm25_rank_indexed and serves exactly what the one-shot
-write_text_index artifact serves (pinned by test across compaction
-and crash replay). The one-shot artifact's ``vocab`` term
+``load_text`` returns the same TextIndex as the one-shot reader and
+serves exactly what the one-shot write_text_index artifact serves
+(pinned by test across compaction and crash replay). The one-shot artifact's ``vocab`` term
 dictionary (round 10) is NOT maintained here — a streamed index
 derives a vocabulary on the fly from its postings when a fuzzy/MLT
 probe needs one; the at-rest dictionary is a compaction-time
@@ -30,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irclogbot_spark.functions.text import WORD_RE, build_positional_index
-from irclogbot_spark.operators.textindex import term_bucket_col
+from irclogbot_spark.operators.textindex import TextIndex, term_bucket_col
 from irclogbot_spark.streaming import postingindex as _pi
 
 _POSTING_SCHEMA = "doc_id long, term string, positions array<int>, term_bkt int"
@@ -195,21 +194,21 @@ def load_vocab(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-def load_text(
-    spark: SparkSession, index_dir: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """(positional postings, doclens, n_buckets) over everything
-    ingested so far — the same triple operators/textindex.py's
-    read_text_index returns for the one-shot artifact, INCLUDING the
-    id-column name: the on-disk doc_id renames back to the
-    meta-recorded ingest id_col (round 13, per ADVICE r12), so a
-    reader passes the same id_col whether the logical index was
-    built one-shot or streamed. Indexes written before the meta
-    carried id_col keep 'doc_id' (the old observable behavior)."""
+def load_text(spark: SparkSession, index_dir: str) -> TextIndex:
+    """The :class:`TextIndex` over everything ingested so far — what
+    operators/textindex.py's read_text_index returns for the one-shot
+    artifact, INCLUDING the id-column name: the on-disk doc_id
+    renames back to the meta-recorded ingest id_col (round 13, per
+    ADVICE r12), so a reader passes the same id_col whether the
+    logical index was built one-shot or streamed. Indexes written
+    before the meta carried id_col keep 'doc_id' (the old observable
+    behavior). The (term, df) dictionary derives from the live
+    postings (lazily — only an expanding query reads it)."""
     postings, meta = _pi.load(spark, index_dir, _POSTING_SCHEMA, _COLS, _META)
     lens = spark.read.schema(_DOCLEN_SCHEMA).parquet(f"{index_dir}/doclens")
     id_col = meta.get("id_col", "doc_id")
     if id_col != "doc_id":
         postings = postings.withColumnRenamed("doc_id", id_col)
         lens = lens.withColumnRenamed("doc_id", id_col)
-    return postings, lens, int(meta["n_buckets"])
+    vocab = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return TextIndex(postings, lens, int(meta["n_buckets"]), vocab)

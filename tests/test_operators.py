@@ -248,6 +248,35 @@ def test_minhash_portable_hash_is_equivalent_machinery(spark, docs):
     assert len(mh) >= 0.9 * len(exact), f"recall {len(mh)}/{len(exact)}"
 
 
+def test_minhash_signature_names_resolve_like_f_col(spark):
+    """minhash_signature's expr() fast path quotes a column name with
+    its backticks doubled, and a dotted name takes the Column path so
+    it resolves as a struct field exactly as F.col does: every
+    spelling of the same text column gives the same signature."""
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog"), (2, "a b c d e f")],
+        "id long, text string",
+    ).select(
+        "id",
+        "text",
+        F.col("text").alias("odd`name"),
+        F.struct("text").alias("s"),
+    )
+
+    def sig(c):
+        return [
+            tuple(r[1])
+            for r in df.select(
+                "id", dedup.minhash_signature(c, num_perm=8, n=3)
+            ).orderBy("id").collect()
+        ]
+
+    want = sig("text")
+    assert len(want) == 2
+    for c in ("s.text", F.col("s.text"), "odd`name", F.col("text")):
+        assert sig(c) == want, c
+
+
 def test_ivf_trainer_matches_driver_replica_exactly(spark, emb):
     """The distributed trainer is a pure function of the corpus
     (integer-quantized accumulation): the driver-side replica that

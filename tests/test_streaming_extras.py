@@ -1226,7 +1226,7 @@ def test_continuous_text_index_matches_one_shot(spark, tmp_path):
     phrase = ["slow", "hash", "batch"]
 
     write_text_index(all_docs, str(tmp_path / "oneshot"), n_buckets=8)
-    opidx, olens, onb = read_text_index(spark, str(tmp_path / "oneshot"))
+    opidx, olens, onb = read_text_index(spark, str(tmp_path / "oneshot"))[:3]
     want_ph = {
         (r.doc_id, r.phrase_count)
         for r in phrase_search_indexed(
@@ -1245,7 +1245,7 @@ def test_continuous_text_index_matches_one_shot(spark, tmp_path):
     ]
 
     def served():
-        pidx, lens, nb = TX.load_text(spark, index_dir)
+        pidx, lens, nb = TX.load_text(spark, index_dir)[:3]
         ph = {
             (r.doc_id, r.phrase_count)
             for r in phrase_search_indexed(
@@ -1269,7 +1269,7 @@ def test_continuous_text_index_matches_one_shot(spark, tmp_path):
     TX.compact(spark, index_dir, upto_batch_id=1)
     ph2, bm2 = served()
     assert ph2 == want_ph and bm2 == want_bm
-    pidx, lens, nb = TX.load_text(spark, index_dir)
+    pidx, lens, nb = TX.load_text(spark, index_dir)[:3]
     plan = (
         phrase_search_indexed(probe_postings(pidx, phrase, nb), phrase)
         ._jdf.queryExecution()
@@ -1339,7 +1339,7 @@ def test_crawl_admit_to_text_index_one_batch(spark, tmp_path):
         q.awaitTermination(120)
 
     def phrase_hits(terms):
-        pidx, _lens, nb = TX.load_text(spark, index_dir)
+        pidx, _lens, nb = TX.load_text(spark, index_dir)[:3]
         probed = probe_postings(pidx, terms, nb)
         return {
             r.doc_id for r in phrase_search_indexed(probed, terms).collect()
@@ -1369,7 +1369,7 @@ def test_crawl_admit_to_text_index_one_batch(spark, tmp_path):
     admitted = {
         r.doc_id for r in spark.read.parquet(f"{corpus_dir}/history").collect()
     }
-    pidx, lens, _nb = TX.load_text(spark, index_dir)
+    pidx, lens, _nb = TX.load_text(spark, index_dir)[:3]
     indexed = {r.doc_id for r in pidx.select("doc_id").distinct().collect()}
     assert indexed == admitted == {1, 11}
     assert {r.doc_id for r in lens.collect()} == admitted
@@ -1616,7 +1616,7 @@ def test_crawl_full_loop_excise_then_index(spark, tmp_path):
         q.awaitTermination(120)
 
     def phrase_hits(terms):
-        pidx, _lens, nb = TX.load_text(spark, index_dir)
+        pidx, _lens, nb = TX.load_text(spark, index_dir)[:3]
         probed = probe_postings(pidx, terms, nb)
         return {
             r.doc_id for r in phrase_search_indexed(probed, terms).collect()
@@ -1655,17 +1655,12 @@ def test_crawl_full_loop_excise_then_index(spark, tmp_path):
 
 def test_compound_queries_serve_from_streamed_index(spark, tmp_path):
     """Round 11: the bool and dis_max compound queries serve from a
-    STREAM-MAINTAINED text index (frames injected via index= — the
-    generation layout has no single path) with rows bit-identical to
-    the scan forms over the union corpus."""
+    STREAM-MAINTAINED text index (the TextIndex load_text returns)
+    with rows bit-identical to the scan source over the union
+    corpus."""
     import json as _json
 
-    from irclogbot_spark.operators.boolquery import (
-        bool_search,
-        bool_search_atrest,
-        dis_max_search,
-        dis_max_search_atrest,
-    )
+    from irclogbot_spark.operators.boolquery import bool_search, dis_max_search
     from irclogbot_spark.streaming import textindex as TX
 
     src = tmp_path / "cq_src"
@@ -1707,7 +1702,7 @@ def test_compound_queries_serve_from_streamed_index(spark, tmp_path):
     want_bool = [tuple(r) for r in bool_search(all_docs, **kw).collect()]
     got_bool = [
         tuple(r)
-        for r in bool_search_atrest(spark, "", **kw, index=frames).collect()
+        for r in bool_search(frames, **kw).collect()
     ]
     assert got_bool == want_bool and len(got_bool) == 2  # docs 1, 2
 
@@ -1717,9 +1712,7 @@ def test_compound_queries_serve_from_streamed_index(spark, tmp_path):
     ]
     got_dm = [
         tuple(r)
-        for r in dis_max_search_atrest(
-            spark, "", terms, 0.3, k=10, index=frames
-        ).collect()
+        for r in dis_max_search(frames, terms, 0.3, k=10).collect()
     ]
     assert got_dm == want_dm and len(got_dm) >= 3
 
@@ -1734,12 +1727,7 @@ def test_compound_query_against_streamed_index_across_batches(spark, tmp_path):
     same for a function_score with a stored-fields fetch."""
     import json as _json
 
-    from irclogbot_spark.operators.boolquery import (
-        bool_search,
-        bool_search_atrest,
-        function_score_search,
-        function_score_search_atrest,
-    )
+    from irclogbot_spark.operators.boolquery import bool_search, function_score_search
     from irclogbot_spark.streaming import textindex as TX
 
     src = tmp_path / "cq_src"
@@ -1793,14 +1781,11 @@ def test_compound_query_against_streamed_index_across_batches(spark, tmp_path):
         feed(batch)
         seen.extend(batch)
         corpus = spark.createDataFrame(seen, "doc_id long, text string")
-        # the streamed generation layout has no single path: inject
-        # the loaded frames through the index= seam (commit efce05d)
+        # the streamed generation layout has no single path: the
+        # loaded TextIndex is the index source
         idx = TX.load_text(spark, index_dir)
         want = [tuple(r) for r in bool_search(corpus, **kw).collect()]
-        got = [
-            tuple(r)
-            for r in bool_search_atrest(spark, None, index=idx, **kw).collect()
-        ]
+        got = [tuple(r) for r in bool_search(idx, **kw).collect()]
         assert got == want and len(got) > 0, (len(seen), got, want)
         # function_score: BM25 inputs from the streamed index, the
         # function field from a column-pruned corpus fetch
@@ -1815,8 +1800,8 @@ def test_compound_query_against_streamed_index_across_batches(spark, tmp_path):
         ]
         got_fs = [
             tuple(r)
-            for r in function_score_search_atrest(
-                spark, None, fields, ["data"], funcs, k=10, index=idx
+            for r in function_score_search(
+                idx._replace(stored=fields), ["data"], funcs, k=10
             ).collect()
         ]
         assert got_fs == want_fs and len(got_fs) > 0, (len(seen),)
@@ -1826,13 +1811,10 @@ def test_multi_match_against_streamed_per_field_indexes(spark, tmp_path):
     """Round 12: multi_match served from CONTINUOUSLY MAINTAINED
     per-field indexes (two independent streamed index dirs — a field
     is its own index) matches the scan form at each batch boundary,
-    through the `indexes=` pre-loaded-frames seam."""
+    through a {field: TextIndex} index source."""
     import json as _json
 
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields,
-        multi_match_best_fields_atrest,
-    )
+    from irclogbot_spark.operators.multimatch import multi_match
     from irclogbot_spark.streaming import textindex as TX
 
     src = tmp_path / "mm_src"
@@ -1880,21 +1862,11 @@ def test_multi_match_against_streamed_per_field_indexes(spark, tmp_path):
         idx = {f: TX.load_text(spark, d) for f, d in dirs.items()}
         want = [
             tuple(r)
-            for r in multi_match_best_fields(
-                corpus, terms, fields, tie_breaker=0.3, k=10
-            ).collect()
+            for r in multi_match(corpus, terms, fields, tie_breaker=0.3, k=10).collect()
         ]
         got = [
             tuple(r)
-            for r in multi_match_best_fields_atrest(
-                spark,
-                [("title", None), ("body", None)],
-                terms,
-                dict(fields),
-                tie_breaker=0.3,
-                k=10,
-                indexes=idx,
-            ).collect()
+            for r in multi_match(idx, terms, fields, tie_breaker=0.3, k=10).collect()
         ]
         assert got == want and len(got) > 0, (len(seen),)
 
@@ -1915,10 +1887,7 @@ def test_match_phrase_prefix_against_streamed_index_across_batches(
     dictionary the walk uses is never stale."""
     import json as _json
 
-    from irclogbot_spark.operators.multimatch import (
-        match_phrase_prefix,
-        match_phrase_prefix_atrest,
-    )
+    from irclogbot_spark.operators.multimatch import match_phrase_prefix
     from irclogbot_spark.streaming import textindex as TX
 
     src = tmp_path / "mpp_src"
@@ -1960,12 +1929,7 @@ def test_match_phrase_prefix_against_streamed_index_across_batches(
         corpus = spark.createDataFrame(seen, "doc_id long, text string")
         idx = TX.load_text(spark, index_dir)
         want = [tuple(r) for r in match_phrase_prefix(corpus, **kw).collect()]
-        got = [
-            tuple(r)
-            for r in match_phrase_prefix_atrest(
-                spark, None, index=idx, **kw
-            ).collect()
-        ]
+        got = [tuple(r) for r in match_phrase_prefix(idx, **kw).collect()]
         assert got == want and len(got) > 0, (tag, got, want)
         # the dictionary the walk uses is exactly the live term set
         vocab_terms = {
@@ -1997,10 +1961,7 @@ def test_streamed_index_id_col_matches_one_shot_convention(spark, tmp_path):
     like n_buckets."""
     import pytest
 
-    from irclogbot_spark.operators.boolquery import (
-        bool_search,
-        bool_search_atrest,
-    )
+    from irclogbot_spark.operators.boolquery import bool_search
     from irclogbot_spark.operators.textindex import read_text_index, write_text_index
     from irclogbot_spark.streaming import textindex as TX
 
@@ -2015,7 +1976,7 @@ def test_streamed_index_id_col_matches_one_shot_convention(spark, tmp_path):
     TX.text_ingest_batch(
         corpus, 0, streamed_dir, n_buckets=8, id_col="id", text_col="remark"
     )
-    pidx, lens, nb = TX.load_text(spark, streamed_dir)
+    pidx, lens, nb = TX.load_text(spark, streamed_dir)[:3]
     assert "id" in pidx.columns and "doc_id" not in pidx.columns
     # doclens keeps its batch_id partition column; the id col renames
     assert "id" in lens.columns and "doc_id" not in lens.columns
@@ -2024,7 +1985,7 @@ def test_streamed_index_id_col_matches_one_shot_convention(spark, tmp_path):
     write_text_index(
         corpus, oneshot_dir, id_col="id", text_col="remark", n_buckets=8
     )
-    o_pidx, o_lens, _ = read_text_index(spark, oneshot_dir)
+    o_pidx, o_lens, _ = read_text_index(spark, oneshot_dir)[:3]
     assert "id" in o_pidx.columns and o_lens.columns == ["id", "dl"]
 
     # both artifact kinds serve the same query under the SAME id_col
@@ -2035,13 +1996,11 @@ def test_streamed_index_id_col_matches_one_shot_convention(spark, tmp_path):
     ]
     got_streamed = [
         tuple(r)
-        for r in bool_search_atrest(
-            spark, None, index=(pidx, lens, nb), **kw
-        ).collect()
+        for r in bool_search(TX.load_text(spark, streamed_dir), **kw).collect()
     ]
     got_oneshot = [
         tuple(r)
-        for r in bool_search_atrest(spark, oneshot_dir, **kw).collect()
+        for r in bool_search(read_text_index(spark, oneshot_dir), **kw).collect()
     ]
     assert got_streamed == want == got_oneshot and len(want) == 2
 

@@ -30,6 +30,38 @@ def df(spark):
     )
 
 
+def _index_sources(spark, docs, tmp_path, name, id_col="doc_id", text_col="text"):
+    """The two index term sources over ``docs``, keyed by kind: a
+    one-shot index, and a streamed index fed in two batches (ids
+    below / from the median id on)."""
+    from irclogbot_spark.operators.textindex import read_text_index, write_text_index
+    from irclogbot_spark.streaming import textindex as TX
+
+    docs = docs.select(id_col, text_col)
+    oneshot = str(tmp_path / f"{name}_oneshot")
+    write_text_index(docs, oneshot, id_col=id_col, text_col=text_col, n_buckets=8)
+    streamed = str(tmp_path / f"{name}_streamed")
+    ids = sorted(r[0] for r in docs.select(id_col).collect())
+    cut = F.col(id_col) < ids[len(ids) // 2]
+    for batch_id, part in enumerate((docs.filter(cut), docs.filter(~cut))):
+        TX.text_ingest_batch(
+            part, batch_id, streamed, n_buckets=8, id_col=id_col, text_col=text_col
+        )
+    return {
+        "oneshot": read_text_index(spark, oneshot),
+        "streamed": TX.load_text(spark, streamed),
+    }
+
+
+def _field_sources(spark, docs, tmp_path, name, fields):
+    """Per kind, one index per field: {kind: {field: TextIndex}}."""
+    per = {
+        f: _index_sources(spark, docs, tmp_path, f"{name}_{f}", text_col=f)
+        for f in fields
+    }
+    return {kind: {f: per[f][kind] for f in fields} for kind in ("oneshot", "streamed")}
+
+
 def test_lang_id_on_handcrafted_samples(spark, df):
     got = {r.doc_id: r.lang for r in df.select("doc_id", lang_id("text").alias("lang")).collect()}
     for i, _, want in SAMPLES:
@@ -392,7 +424,7 @@ def test_at_rest_text_index_serves_all_query_types(spark, tmp_path):
     )
     path = str(tmp_path / "tidx")
     write_text_index(docs, path, n_buckets=8)
-    pidx, lens, nb = read_text_index(spark, path)
+    pidx, lens, nb = read_text_index(spark, path)[:3]
     assert nb == 8
 
     phrase = ["slow", "hash", "batch"]
@@ -497,7 +529,7 @@ def test_bm25_search_after_atrest_keyset_pagination(spark, tmp_path):
     assert len(r1) == 10 and len(r2) == 10
     assert not ({x[0] for x in r1} & {x[0] for x in r2})
 
-    pidx, lens, nb = read_text_index(spark, path)
+    pidx, lens, nb = read_text_index(spark, path)[:3]
     top20 = [
         tuple(r)
         for r in bm25_rank_indexed(
@@ -651,17 +683,13 @@ def test_bool_search_clause_semantics(spark):
 
 
 def test_bool_search_atrest_bit_equal_and_bucket_pruned(spark, tmp_path):
-    """bool_search_atrest (round 11): bit-identical rows to the scan
-    form from ONE bucket-pruned postings probe (term_bkt
-    PartitionFilters cover all referenced terms, must_not
-    included)."""
+    """bool_search over the index sources (round 11): bit-identical
+    rows to the scan source; the one-shot index serves it from ONE
+    bucket-pruned postings probe (term_bkt PartitionFilters cover all
+    referenced terms, must_not included)."""
     import re as _re
 
-    from irclogbot_spark.operators.boolquery import (
-        bool_search,
-        bool_search_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.boolquery import bool_search
 
     docs = spark.createDataFrame(
         [
@@ -674,8 +702,6 @@ def test_bool_search_atrest_bit_equal_and_bucket_pruned(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    path = str(tmp_path / "tidx_bool")
-    write_text_index(docs, path, n_buckets=8)
     kw = dict(
         must=["data"],
         should=["spark", "merge"],
@@ -685,13 +711,15 @@ def test_bool_search_atrest_bit_equal_and_bucket_pruned(spark, tmp_path):
         k=10,
     )
     want = [tuple(r) for r in bool_search(docs, **kw).collect()]
-    at = bool_search_atrest(spark, path, **kw)
-    got = [tuple(r) for r in at.collect()]
-    assert got == want and len(got) > 0
-    plan = at._jdf.queryExecution().executedPlan().toString()
-    pf = _re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("term_bkt" in m for m in pf), plan[:2000]
-    assert "TakeOrderedAndProject" in plan
+    for kind, idx in _index_sources(spark, docs, tmp_path, "bool").items():
+        at = bool_search(idx, **kw)
+        got = [tuple(r) for r in at.collect()]
+        assert got == want and len(got) > 0, kind
+        plan = at._jdf.queryExecution().executedPlan().toString()
+        assert "TakeOrderedAndProject" in plan, kind
+        if kind == "oneshot":
+            pf = _re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+            assert any("term_bkt" in m for m in pf), plan[:2000]
 
 
 def test_dis_max_scoring_and_atrest_twin(spark, tmp_path):
@@ -702,12 +730,7 @@ def test_dis_max_scoring_and_atrest_twin(spark, tmp_path):
     bit-identical and bucket-pruned."""
     import re as _re
 
-    from irclogbot_spark.operators.boolquery import (
-        bool_search,
-        dis_max_search,
-        dis_max_search_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.boolquery import bool_search, dis_max_search
 
     docs = spark.createDataFrame(
         [
@@ -743,18 +766,18 @@ def test_dis_max_scoring_and_atrest_twin(spark, tmp_path):
     assert set(tb0) == set(tb1)
     assert all(tb0[d] <= tb1[d] for d in tb0)
 
-    path = str(tmp_path / "tidx_dm")
-    write_text_index(docs, path, n_buckets=8)
-    at = dis_max_search_atrest(spark, path, terms, tie_breaker=0.3, k=10)
-    got = [tuple(r) for r in at.collect()]
     want = [
         tuple(r)
         for r in dis_max_search(docs, terms, tie_breaker=0.3, k=10).collect()
     ]
-    assert got == want and len(got) == 10
-    plan = at._jdf.queryExecution().executedPlan().toString()
-    pf = _re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert any("term_bkt" in m for m in pf), plan[:2000]
+    for kind, idx in _index_sources(spark, docs, tmp_path, "dm").items():
+        at = dis_max_search(idx, terms, tie_breaker=0.3, k=10)
+        got = [tuple(r) for r in at.collect()]
+        assert got == want and len(got) == 10, kind
+        if kind == "oneshot":
+            plan = at._jdf.queryExecution().executedPlan().toString()
+            pf = _re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
+            assert any("term_bkt" in m for m in pf), plan[:2000]
 
 
 def test_boosting_and_constant_score_compound_queries(spark, tmp_path):
@@ -765,12 +788,9 @@ def test_boosting_and_constant_score_compound_queries(spark, tmp_path):
     filter hit exactly the boost. At-rest twins bit-identical."""
     from irclogbot_spark.operators.boolquery import (
         boosting_search,
-        boosting_search_atrest,
         bool_search,
         constant_score_search,
-        constant_score_search_atrest,
     )
-    from irclogbot_spark.operators.textindex import write_text_index
 
     docs = spark.createDataFrame(
         [
@@ -809,28 +829,27 @@ def test_boosting_and_constant_score_compound_queries(spark, tmp_path):
     rows = [(r.doc_id, r.score) for r in cs.collect()]
     assert rows == [(5, 1.5)]
 
-    path = str(tmp_path / "tidx_bc")
-    write_text_index(docs, path, n_buckets=8)
-    at_b = [
-        tuple(r)
-        for r in boosting_search_atrest(
-            spark, path, ["batch", "window"], ["slow"], 0.5, k=10
-        ).collect()
-    ]
     want_b = [
         tuple(r)
         for r in boosting_search(
             docs, ["batch", "window"], ["slow"], 0.5, k=10
         ).collect()
     ]
-    assert at_b == want_b
-    at_c = [
-        tuple(r)
-        for r in constant_score_search_atrest(
-            spark, path, ["data", "merge"], 1.5, dl_between=(3, 50), k=20
-        ).collect()
-    ]
-    assert at_c == rows
+    for kind, idx in _index_sources(spark, docs, tmp_path, "bc").items():
+        at_b = [
+            tuple(r)
+            for r in boosting_search(
+                idx, ["batch", "window"], ["slow"], 0.5, k=10
+            ).collect()
+        ]
+        assert at_b == want_b, kind
+        at_c = [
+            tuple(r)
+            for r in constant_score_search(
+                idx, ["data", "merge"], 1.5, dl_between=(3, 50), k=20
+            ).collect()
+        ]
+        assert at_c == rows, kind
 
 
 def test_function_score_factors_and_modes(spark, tmp_path):
@@ -840,12 +859,7 @@ def test_function_score_factors_and_modes(spark, tmp_path):
     field_value_factor combine per score_mode/boost_mode; the
     at-rest twin (stored-fields fetch for the function field) is
     bit-identical."""
-    from irclogbot_spark.operators.boolquery import (
-        bool_search,
-        function_score_search,
-        function_score_search_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.boolquery import bool_search, function_score_search
 
     # one 'data' doc per n_chars anchor: origin, ±scale, ±s, beyond
     docs = spark.createDataFrame(
@@ -888,19 +902,18 @@ def test_function_score_factors_and_modes(spark, tmp_path):
         {"kind": "field_value_factor", "field": "n_chars", "factor": 0.001},
         {"kind": "linear_decay", "field": "n_chars", "origin": 300, "scale": 200},
     ]
-    path = str(tmp_path / "tidx_fs")
-    write_text_index(docs, path, n_buckets=8)
     want = [
         tuple(r)
         for r in function_score_search(docs, ["data"], funcs, k=10).collect()
     ]
-    at = [
-        tuple(r)
-        for r in function_score_search_atrest(
-            spark, path, docs, ["data"], funcs, k=10
-        ).collect()
-    ]
-    assert at == want
+    for kind, idx in _index_sources(spark, docs, tmp_path, "fs").items():
+        at = [
+            tuple(r)
+            for r in function_score_search(
+                idx._replace(stored=docs), ["data"], funcs, k=10
+            ).collect()
+        ]
+        assert at == want, kind
 
 
 def test_compound_query_input_validation(spark):
@@ -976,6 +989,48 @@ def test_compound_query_input_validation(spark):
         )
 
 
+def test_bm25_edge_parameters_finite_across_sources(spark, tmp_path):
+    """k1=0 and b=1.0 are inside BM25's domain: a tf=0 term
+    contributes a literal 0.0 instead of its 0/0 quotient (ANSI
+    DIVIDE_BY_ZERO — k1=0 zeroes the denominator, and so does b=1
+    with dl=0, e.g. an empty field or one the index source coalesces
+    to dl=0). bool, dis_max and multi_match return finite scores,
+    identical across the scan, one-shot index and streamed index
+    sources."""
+    import math
+
+    from irclogbot_spark.operators.boolquery import bool_search, dis_max_search
+    from irclogbot_spark.operators.multimatch import multi_match
+
+    docs = spark.createDataFrame(
+        [
+            (1, "alpha beta", "alpha"),
+            (2, "alpha x y", None),
+            (3, "beta z", ""),
+            (4, "", "beta beta"),
+            (5, None, "gamma"),
+        ],
+        "doc_id long, text string, title string",
+    )
+    text_sources = _index_sources(spark, docs, tmp_path, "edge")
+    field_sources = _field_sources(spark, docs, tmp_path, "edge_mm", ["title", "text"])
+    fields = [("title", 2.0), ("text", 1.0)]
+    for k1, b in ((0.0, 0.75), (1.2, 1.0), (0.0, 1.0)):
+        queries = [
+            (lambda s: bool_search(s, must=["alpha"], should=["beta"], k1=k1, b=b),
+             text_sources),
+            (lambda s: dis_max_search(s, ["alpha", "beta"], k1=k1, b=b),
+             text_sources),
+            (lambda s: multi_match(s, ["alpha", "beta"], fields, k1=k1, b=b),
+             field_sources),
+        ]
+        for run, sources in queries:
+            want = [tuple(r) for r in run(docs).collect()]
+            assert want and all(math.isfinite(r[1]) for r in want), (k1, b, want)
+            for kind, idx in sources.items():
+                assert [tuple(r) for r in run(idx).collect()] == want, (k1, b, kind)
+
+
 def test_multi_match_best_fields_semantics(spark, tmp_path):
     """multi_match type=best_fields (round 12 —
     operators/multimatch.py): each field scores boost x the
@@ -987,11 +1042,7 @@ def test_multi_match_best_fields_semantics(spark, tmp_path):
     plain per-field sum. The at-rest twin (one index PER FIELD,
     full-outer-joined hit sets) is bit-identical."""
     from irclogbot_spark.operators.boolquery import bool_search
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields,
-        multi_match_best_fields_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.multimatch import multi_match
 
     docs = spark.createDataFrame(
         [
@@ -1007,7 +1058,7 @@ def test_multi_match_best_fields_semantics(spark, tmp_path):
     # single-field boost-1 degenerate == should-only bool over body
     mm1 = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(
+        for r in multi_match(
             docs, terms, [("body", 1.0)], k=10
         ).collect()
     }
@@ -1020,10 +1071,10 @@ def test_multi_match_best_fields_semantics(spark, tmp_path):
     }
     assert mm1 == ref
     # tie_breaker=1.0 degenerates to s_title + s_body; 0.0 to max
-    both = multi_match_best_fields(
+    both = multi_match(
         docs, terms, [("title", 2.0), ("body", 1.0)], tie_breaker=1.0, k=10
     )
-    best_of = multi_match_best_fields(
+    best_of = multi_match(
         docs, terms, [("title", 2.0), ("body", 1.0)], tie_breaker=0.0, k=10
     )
     s_sum = {r.doc_id: r.score for r in both.collect()}
@@ -1032,36 +1083,25 @@ def test_multi_match_best_fields_semantics(spark, tmp_path):
     assert all(s_sum[d] >= s_max[d] for d in s_sum)
     # doc 5 hits body only: max == sum == its body score
     assert s_sum[5] == s_max[5]
-    # at-rest bit-identity: one index per field, hit sets differ per
+    # index bit-identity: one index per field, hit sets differ per
     # field (doc 4 hits title only, doc 5 body only)
-    t1 = str(tmp_path / "idx_title")
-    t2 = str(tmp_path / "idx_body")
-    write_text_index(docs.select("doc_id", "title"), t1, text_col="title", n_buckets=8)
-    write_text_index(docs.select("doc_id", "body"), t2, text_col="body", n_buckets=8)
     kw = dict(tie_breaker=0.3, k=10)
-    want = [
-        tuple(r)
-        for r in multi_match_best_fields(
-            docs, terms, [("title", 2.0), ("body", 1.0)], **kw
-        ).collect()
-    ]
-    got = [
-        tuple(r)
-        for r in multi_match_best_fields_atrest(
-            spark, [("title", t1), ("body", t2)], terms,
-            {"title": 2.0, "body": 1.0}, **kw
-        ).collect()
-    ]
-    assert got == want and len(got) == 4
+    fields = [("title", 2.0), ("body", 1.0)]
+    want = [tuple(r) for r in multi_match(docs, terms, fields, **kw).collect()]
+    for kind, idx in _field_sources(
+        spark, docs, tmp_path, "mm", ["title", "body"]
+    ).items():
+        got = [tuple(r) for r in multi_match(idx, terms, fields, **kw).collect()]
+        assert got == want and len(got) == 4, kind
     # validation: duplicate terms, duplicate fields, bad boost
     import pytest
 
     with pytest.raises(ValueError, match="duplicate"):
-        multi_match_best_fields(docs, ["spark", "spark"], [("body", 1.0)])
+        multi_match(docs, ["spark", "spark"], [("body", 1.0)])
     with pytest.raises(ValueError, match="duplicate fields"):
-        multi_match_best_fields(docs, terms, [("body", 1.0), ("body", 2.0)])
+        multi_match(docs, terms, [("body", 1.0), ("body", 2.0)])
     with pytest.raises(ValueError, match="boost"):
-        multi_match_best_fields(docs, terms, [("body", 0.0)])
+        multi_match(docs, terms, [("body", 0.0)])
 
 
 def test_minimum_should_match_percentage_syntax(spark, tmp_path):
@@ -1075,10 +1115,8 @@ def test_minimum_should_match_percentage_syntax(spark, tmp_path):
 
     from irclogbot_spark.operators.boolquery import (
         bool_search,
-        bool_search_atrest,
         parse_minimum_should_match,
     )
-    from irclogbot_spark.operators.textindex import write_text_index
 
     # the resolution table (ES reference semantics)
     assert parse_minimum_should_match(None, 4) is None
@@ -1118,21 +1156,20 @@ def test_minimum_should_match_percentage_syntax(spark, tmp_path):
         ).collect()
     ]
     assert pct == explicit and {r[0] for r in pct} == {1, 2, 4}
-    path = str(tmp_path / "idx_msm")
-    write_text_index(docs, path, n_buckets=8)
-    at = [
-        tuple(r)
-        for r in bool_search_atrest(
-            spark, path, should=should, minimum_should_match="-25%", k=10
-        ).collect()
-    ]
     sc = [
         tuple(r)
         for r in bool_search(
             docs, should=should, minimum_should_match=3, k=10
         ).collect()
     ]
-    assert at == sc and len(at) == 1  # only doc 1 has >= 3 of 4
+    for kind, idx in _index_sources(spark, docs, tmp_path, "msm").items():
+        at = [
+            tuple(r)
+            for r in bool_search(
+                idx, should=should, minimum_should_match="-25%", k=10
+            ).collect()
+        ]
+        assert at == sc and len(at) == 1, kind  # only doc 1 has >= 3 of 4
 
 
 def test_bool_fuzzy_clause_expansion_and_atrest(spark, tmp_path):
@@ -1147,12 +1184,7 @@ def test_bool_fuzzy_clause_expansion_and_atrest(spark, tmp_path):
     injection derives df from postings."""
     import pytest
 
-    from irclogbot_spark.operators.boolquery import (
-        bool_fuzzy_search,
-        bool_fuzzy_search_atrest,
-        bool_search,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.boolquery import bool_fuzzy_search, bool_search
 
     docs = spark.createDataFrame(
         [
@@ -1208,9 +1240,9 @@ def test_bool_fuzzy_clause_expansion_and_atrest(spark, tmp_path):
             docs, must=["data"], should=["merge", "merga"], k=10
         ).collect()
     ]
-    # at-rest: vocab-sidecar walk, bit-identical to the scan form
-    path = str(tmp_path / "idx_bf")
-    write_text_index(docs, path, n_buckets=8)
+    # index sources: the one-shot vocab sidecar and the streamed
+    # postings-derived dictionary, bit-identical to the scan source
+    sources = _index_sources(spark, docs, tmp_path, "bf")
     for kw in (
         dict(must=["data"], fuzzy=["mergz"], k=10),
         dict(must=["data"], fuzzy=["mergz"], max_expansions=1, k=10),
@@ -1218,12 +1250,10 @@ def test_bool_fuzzy_clause_expansion_and_atrest(spark, tmp_path):
              max_expansions=1, k=10),
         dict(should=["batch"], fuzzy=["mergz"], must_not=["serge"], k=10),
     ):
-        a = [
-            tuple(r)
-            for r in bool_fuzzy_search_atrest(spark, path, **kw).collect()
-        ]
         s = [tuple(r) for r in bool_fuzzy_search(docs, **kw).collect()]
-        assert a == s and len(a) > 0, kw
+        for kind, idx in sources.items():
+            a = [tuple(r) for r in bool_fuzzy_search(idx, **kw).collect()]
+            assert a == s and len(a) > 0, (kw, kind)
     # validation: bad knobs raise; empty expansion with no other
     # positive clause raises (the programmer-facing bool contract)
     with pytest.raises(ValueError, match="max_dist"):
@@ -1247,11 +1277,7 @@ def test_multi_match_cross_fields_blended_df_semantics(spark, tmp_path):
     but common in the other (vs best_fields' per-field df); (d) the
     at-rest per-field-index form is bit-identical; (e) tie_breaker
     folds the non-best fields in."""
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields,
-        multi_match_best_fields_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.multimatch import multi_match
 
     rows = [
         (1, "will smith", "will met will at the will office"),
@@ -1308,7 +1334,7 @@ def test_multi_match_cross_fields_blended_df_semantics(spark, tmp_path):
     for tie in (0.0, 0.4):
         got = {
             r.doc_id: r.score
-            for r in multi_match_best_fields(
+            for r in multi_match(
                 docs, terms, fields, k=10, mm_type="cross_fields",
                 tie_breaker=tie,
             ).collect()
@@ -1323,11 +1349,11 @@ def test_multi_match_cross_fields_blended_df_semantics(spark, tmp_path):
     # per-field df best_fields uses, so cross != best on doc 4
     best = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(docs, terms, fields, k=10).collect()
+        for r in multi_match(docs, terms, fields, k=10).collect()
     }
     cross = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(
+        for r in multi_match(
             docs, terms, fields, k=10, mm_type="cross_fields"
         ).collect()
     }
@@ -1339,7 +1365,7 @@ def test_multi_match_cross_fields_blended_df_semantics(spark, tmp_path):
     per_type = [
         {
             r.doc_id: r.score
-            for r in multi_match_best_fields(
+            for r in multi_match(
                 docs, terms, one, k=10, mm_type=mt
             ).collect()
         }
@@ -1347,32 +1373,23 @@ def test_multi_match_cross_fields_blended_df_semantics(spark, tmp_path):
     ]
     assert per_type[0] == per_type[1] == per_type[2]
 
-    # at-rest bit-identity (per-field indexes, full-outer raw join)
-    t1, t2 = str(tmp_path / "xf_t"), str(tmp_path / "xf_b")
-    write_text_index(docs.select("doc_id", "title"), t1, text_col="title", n_buckets=8)
-    write_text_index(docs.select("doc_id", "body"), t2, text_col="body", n_buckets=8)
+    # index bit-identity (one index per field)
+    sources = _field_sources(spark, docs, tmp_path, "xf", ["title", "body"])
     for tie in (0.0, 0.4):
+        kw = dict(k=10, mm_type="cross_fields", tie_breaker=tie)
         want_rows = [
-            tuple(r)
-            for r in multi_match_best_fields(
-                docs, terms, fields, k=10, mm_type="cross_fields",
-                tie_breaker=tie,
-            ).collect()
+            tuple(r) for r in multi_match(docs, terms, fields, **kw).collect()
         ]
-        got_rows = [
-            tuple(r)
-            for r in multi_match_best_fields_atrest(
-                spark, [("title", t1), ("body", t2)], terms,
-                {"title": 2.0, "body": 1.0}, k=10, mm_type="cross_fields",
-                tie_breaker=tie,
-            ).collect()
-        ]
-        assert got_rows == want_rows and len(got_rows) == 4, tie
+        for kind, idx in sources.items():
+            got_rows = [
+                tuple(r) for r in multi_match(idx, terms, fields, **kw).collect()
+            ]
+            assert got_rows == want_rows and len(got_rows) == 4, (tie, kind)
 
     import pytest
 
     with pytest.raises(ValueError, match="unknown multi_match type"):
-        multi_match_best_fields(docs, terms, fields, mm_type="nope")
+        multi_match(docs, terms, fields, mm_type="nope")
 
 
 def test_multi_match_operator_and_gates(spark, tmp_path):
@@ -1387,11 +1404,7 @@ def test_multi_match_operator_and_gates(spark, tmp_path):
     three types."""
     import pytest
 
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields,
-        multi_match_best_fields_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.multimatch import multi_match
 
     docs = spark.createDataFrame(
         [
@@ -1410,7 +1423,7 @@ def test_multi_match_operator_and_gates(spark, tmp_path):
     # doc 3 (terms split across fields) and doc 4 (merge missing) out
     and_best = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(
+        for r in multi_match(
             docs, terms, fields, tie_breaker=0.3, k=10, operator="and"
         ).collect()
     }
@@ -1419,13 +1432,13 @@ def test_multi_match_operator_and_gates(spark, tmp_path):
     # tie_breaker=1.0 (plain sum) equals its title-only score
     and_sum = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(
+        for r in multi_match(
             docs, terms, fields, tie_breaker=1.0, k=10, operator="and"
         ).collect()
     }
     title_only = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(
+        for r in multi_match(
             docs, terms, [("title", 2.0)], k=10, operator="and"
         ).collect()
     }
@@ -1433,14 +1446,14 @@ def test_multi_match_operator_and_gates(spark, tmp_path):
     # cross_fields AND: term-centric — doc 3 (split) is IN, doc 4 out
     and_cross = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(
+        for r in multi_match(
             docs, terms, fields, k=10, mm_type="cross_fields",
             operator="and",
         ).collect()
     }
     or_cross = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(
+        for r in multi_match(
             docs, terms, fields, k=10, mm_type="cross_fields"
         ).collect()
     }
@@ -1451,34 +1464,21 @@ def test_multi_match_operator_and_gates(spark, tmp_path):
     # a doc fully matching every field scores the same under or/and
     or_best = {
         r.doc_id: r.score
-        for r in multi_match_best_fields(
+        for r in multi_match(
             docs, terms, fields, tie_breaker=0.3, k=10
         ).collect()
     }
     assert and_best[1] == or_best[1]
-    # at-rest bit-identity for all three types under operator=and
-    t1, t2 = str(tmp_path / "opand_t"), str(tmp_path / "opand_b")
-    write_text_index(docs.select("doc_id", "title"), t1, text_col="title", n_buckets=8)
-    write_text_index(docs.select("doc_id", "body"), t2, text_col="body", n_buckets=8)
+    # index bit-identity for all three types under operator=and
+    sources = _field_sources(spark, docs, tmp_path, "opand", ["title", "body"])
     for mt, tie in (("best_fields", 0.3), ("most_fields", 0.0), ("cross_fields", 0.0)):
-        want = [
-            tuple(r)
-            for r in multi_match_best_fields(
-                docs, terms, fields, tie_breaker=tie, k=10, mm_type=mt,
-                operator="and",
-            ).collect()
-        ]
-        got = [
-            tuple(r)
-            for r in multi_match_best_fields_atrest(
-                spark, [("title", t1), ("body", t2)], terms,
-                {"title": 2.0, "body": 1.0}, tie_breaker=tie, k=10,
-                mm_type=mt, operator="and",
-            ).collect()
-        ]
-        assert got == want and len(got) > 0, mt
+        kw = dict(tie_breaker=tie, k=10, mm_type=mt, operator="and")
+        want = [tuple(r) for r in multi_match(docs, terms, fields, **kw).collect()]
+        for kind, idx in sources.items():
+            got = [tuple(r) for r in multi_match(idx, terms, fields, **kw).collect()]
+            assert got == want and len(got) > 0, (mt, kind)
     with pytest.raises(ValueError, match="operator"):
-        multi_match_best_fields(docs, terms, fields, operator="xor")
+        multi_match(docs, terms, fields, operator="xor")
 
 
 def test_multi_match_null_field_scores_zero_both_forms(spark, tmp_path):
@@ -1489,11 +1489,7 @@ def test_multi_match_null_field_scores_zero_both_forms(spark, tmp_path):
     missing field to 0.0. The scan now coalesces NULL to '' and the
     at-rest doclens writes dl=0 for NULL text, so avgdl and scores
     stay bit-identical."""
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields,
-        multi_match_best_fields_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.multimatch import multi_match
 
     docs = spark.createDataFrame(
         [
@@ -1508,7 +1504,7 @@ def test_multi_match_null_field_scores_zero_both_forms(spark, tmp_path):
     terms = ["spark", "merge"]
     fields = [("title", 2.0), ("body", 1.0)]
     for mm_type in ("best_fields", "most_fields"):
-        rows = multi_match_best_fields(
+        rows = multi_match(
             docs, terms, fields, k=10, mm_type=mm_type,
             tie_breaker=0.3 if mm_type == "best_fields" else 0.0,
         ).collect()
@@ -1516,29 +1512,19 @@ def test_multi_match_null_field_scores_zero_both_forms(spark, tmp_path):
         # doc 4 (both NULL) never matches; every score is finite > 0
         assert 4 not in got and set(got) == {1, 2, 3, 5}
         assert all(s > 0.0 for s in got.values()), got
-    # at-rest bit-identity with NULL fields present in the corpus
-    t1 = str(tmp_path / "idx_title_null")
-    t2 = str(tmp_path / "idx_body_null")
-    write_text_index(
-        docs.select("doc_id", "title"), t1, text_col="title", n_buckets=8
-    )
-    write_text_index(
-        docs.select("doc_id", "body"), t2, text_col="body", n_buckets=8
-    )
+    # index bit-identity with NULL fields present in the corpus
     want = [
         tuple(r)
-        for r in multi_match_best_fields(
-            docs, terms, fields, tie_breaker=0.3, k=10
-        ).collect()
+        for r in multi_match(docs, terms, fields, tie_breaker=0.3, k=10).collect()
     ]
-    got_at = [
-        tuple(r)
-        for r in multi_match_best_fields_atrest(
-            spark, [("title", t1), ("body", t2)], terms,
-            {"title": 2.0, "body": 1.0}, tie_breaker=0.3, k=10
-        ).collect()
-    ]
-    assert got_at == want and len(got_at) == 4
+    for kind, idx in _field_sources(
+        spark, docs, tmp_path, "null", ["title", "body"]
+    ).items():
+        got_at = [
+            tuple(r)
+            for r in multi_match(idx, terms, fields, tie_breaker=0.3, k=10).collect()
+        ]
+        assert got_at == want and len(got_at) == 4, kind
 
 
 def test_match_phrase_prefix_semantics(spark, tmp_path):
@@ -1550,11 +1536,7 @@ def test_match_phrase_prefix_semantics(spark, tmp_path):
     bucket-pruned positional probe) is bit-identical."""
     import pytest
 
-    from irclogbot_spark.operators.multimatch import (
-        match_phrase_prefix,
-        match_phrase_prefix_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.multimatch import match_phrase_prefix
 
     docs = spark.createDataFrame(
         [
@@ -1588,9 +1570,8 @@ def test_match_phrase_prefix_semantics(spark, tmp_path):
         for r in match_phrase_prefix(docs, [], "qu", k=10).collect()
     }
     assert pure == {1: 2, 2: 1, 3: 1, 4: 1, 5: 3}
-    # at-rest twin: same three shapes, bit-identical
-    path = str(tmp_path / "idx_pp")
-    write_text_index(docs, path, n_buckets=8)
+    # index sources: same shapes, bit-identical
+    sources = _index_sources(spark, docs, tmp_path, "pp")
     for kw in (
         dict(terms=["quick", "brown"], prefix="f", k=10),
         dict(terms=["quick", "brown"], prefix="f", max_expansions=2, k=10),
@@ -1598,11 +1579,9 @@ def test_match_phrase_prefix_semantics(spark, tmp_path):
         dict(terms=["quick", "brown"], prefix="zz", k=10),  # no expansion
     ):
         want = [tuple(r) for r in match_phrase_prefix(docs, **kw).collect()]
-        got = [
-            tuple(r)
-            for r in match_phrase_prefix_atrest(spark, path, **kw).collect()
-        ]
-        assert got == want, kw
+        for kind, idx in sources.items():
+            got = [tuple(r) for r in match_phrase_prefix(idx, **kw).collect()]
+            assert got == want, (kw, kind)
     # validation
     with pytest.raises(ValueError, match="prefix"):
         match_phrase_prefix(docs, ["quick"], "")
@@ -1646,10 +1625,8 @@ def test_simple_query_string_parser_and_compile(spark, tmp_path):
     from irclogbot_spark.operators.boolquery import bool_search
     from irclogbot_spark.operators.querystring import (
         parse_simple_query,
-        simple_query_string_atrest,
         simple_query_string_search,
     )
-    from irclogbot_spark.operators.textindex import write_text_index
 
     # parser contract
     assert parse_simple_query("+data batch -dup window") == {
@@ -1731,29 +1708,27 @@ def test_simple_query_string_parser_and_compile(spark, tmp_path):
             docs, must=["merge"], should=["mercury", "merged"], k=10
         ).collect()
     ]
-    # at-rest bit-identity, with and without prefix expansion
-    path = str(tmp_path / "idx_sqs")
-    write_text_index(docs, path, n_buckets=8)
+    # index bit-identity, with and without prefix expansion
+    sources = _index_sources(spark, docs, tmp_path, "sqs")
     for q in ("+data batch -dup window", "+data mer*", "+merge mer*"):
-        a = [
-            tuple(r)
-            for r in simple_query_string_atrest(spark, path, q, k=10).collect()
-        ]
         s = [
             tuple(r) for r in simple_query_string_search(docs, q, k=10).collect()
         ]
-        assert a == s, q
+        for kind, idx in sources.items():
+            a = [
+                tuple(r)
+                for r in simple_query_string_search(idx, q, k=10).collect()
+            ]
+            assert a == s, (q, kind)
     # no surviving positive clause -> ES's empty hits, never an
     # error (ADVICE r12 medium): pure must_not, a dead prefix, and a
     # degraded must-prefix that expands to nothing — both physical
-    # forms return the empty (id, score, n_should) frame
+    # sources return the empty (id, score, n_should) frame
     for q in ("-dup", "zzz*", "+zzz*", "-dup zzz*", "", "+ - *"):
-        empty_scan = simple_query_string_search(docs, q, k=10)
-        assert empty_scan.columns == ["doc_id", "score", "n_should"], q
-        assert empty_scan.count() == 0, q
-        empty_at = simple_query_string_atrest(spark, path, q, k=10)
-        assert empty_at.columns == ["doc_id", "score", "n_should"], q
-        assert empty_at.count() == 0, q
+        for src in (docs, *sources.values()):
+            empty = simple_query_string_search(src, q, k=10)
+            assert empty.columns == ["doc_id", "score", "n_should"], q
+            assert empty.count() == 0, q
 
 
 def test_multi_match_most_fields_is_per_field_sum(spark, tmp_path):
@@ -1765,11 +1740,7 @@ def test_multi_match_most_fields_is_per_field_sum(spark, tmp_path):
     unknown types are rejected."""
     import pytest
 
-    from irclogbot_spark.operators.multimatch import (
-        multi_match_best_fields,
-        multi_match_best_fields_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.multimatch import multi_match
 
     docs = spark.createDataFrame(
         [
@@ -1780,27 +1751,26 @@ def test_multi_match_most_fields_is_per_field_sum(spark, tmp_path):
         "doc_id long, title string, body string",
     )
     terms, fields = ["spark", "merge"], [("title", 2.0), ("body", 1.0)]
-    most = multi_match_best_fields(
+    most = multi_match(
         docs, terms, fields, k=10, mm_type="most_fields"
     )
-    tb1 = multi_match_best_fields(docs, terms, fields, tie_breaker=1.0, k=10)
+    tb1 = multi_match(docs, terms, fields, tie_breaker=1.0, k=10)
     assert [tuple(r) for r in most.collect()] == [tuple(r) for r in tb1.collect()]
-    t1, t2 = str(tmp_path / "mf_t"), str(tmp_path / "mf_b")
-    write_text_index(docs.select("doc_id", "title"), t1, text_col="title", n_buckets=8)
-    write_text_index(docs.select("doc_id", "body"), t2, text_col="body", n_buckets=8)
-    at = multi_match_best_fields_atrest(
-        spark, [("title", t1), ("body", t2)], terms,
-        {"title": 2.0, "body": 1.0}, k=10, mm_type="most_fields",
-    )
-    assert [tuple(r) for r in at.collect()] == [tuple(r) for r in most.collect()]
+    for kind, idx in _field_sources(
+        spark, docs, tmp_path, "mf", ["title", "body"]
+    ).items():
+        at = multi_match(idx, terms, fields, k=10, mm_type="most_fields")
+        assert [tuple(r) for r in at.collect()] == [
+            tuple(r) for r in most.collect()
+        ], kind
     with pytest.raises(ValueError, match="tie_breaker"):
-        multi_match_best_fields(
+        multi_match(
             docs, terms, fields, tie_breaker=0.5, mm_type="most_fields"
         )
     # cross_fields is implemented since round 13 (its own test);
     # an actually-unknown type still raises
     with pytest.raises(ValueError, match="multi_match type"):
-        multi_match_best_fields(docs, terms, fields, mm_type="worst_fields")
+        multi_match(docs, terms, fields, mm_type="worst_fields")
 
 
 def test_terms_set_per_doc_msm_field(spark, tmp_path):
@@ -1811,11 +1781,7 @@ def test_terms_set_per_doc_msm_field(spark, tmp_path):
     twin (stored-fields fetch for the msm column) bit-identical."""
     import pytest
 
-    from irclogbot_spark.operators.boolquery import (
-        terms_set_search,
-        terms_set_search_atrest,
-    )
-    from irclogbot_spark.operators.textindex import write_text_index
+    from irclogbot_spark.operators.boolquery import terms_set_search
 
     docs = spark.createDataFrame(
         [
@@ -1834,16 +1800,18 @@ def test_terms_set_per_doc_msm_field(spark, tmp_path):
         for r in terms_set_search(docs, terms, "req", k=10).collect()
     }
     assert got == {1: 3, 4: 1, 5: 2}
-    path = str(tmp_path / "idx_ts")
-    write_text_index(docs.select("doc_id", "text"), path, n_buckets=8)
-    at = [
-        tuple(r)
-        for r in terms_set_search_atrest(
-            spark, path, docs.select("doc_id", "req"), terms, "req", k=10
-        ).collect()
-    ]
     want = [tuple(r) for r in terms_set_search(docs, terms, "req", k=10).collect()]
-    assert at == want
+    for kind, idx in _index_sources(spark, docs, tmp_path, "ts").items():
+        at = [
+            tuple(r)
+            for r in terms_set_search(
+                idx._replace(stored=docs.select("doc_id", "req")), terms, "req", k=10
+            ).collect()
+        ]
+        assert at == want, kind
+        # the index source needs stored fields for the msm field
+        with pytest.raises(ValueError, match="stored"):
+            terms_set_search(idx, terms, "req")
     with pytest.raises(ValueError, match="duplicate"):
         terms_set_search(docs, ["data", "data"], "req")
 
@@ -1900,7 +1868,7 @@ def test_span_first_boundary_semantics(spark, tmp_path):
     write_text_index(docs, path, n_buckets=8)
     from irclogbot_spark.operators.textindex import read_text_index
 
-    apidx, _l, nb = read_text_index(spark, path)
+    apidx, _l, nb = read_text_index(spark, path)[:3]
     at = {
         r.doc_id: r.n_spans
         for r in span_first_search(
@@ -1980,7 +1948,7 @@ def test_span_not_exclusion_semantics(spark, tmp_path):
     # at-rest probe twin
     path = str(tmp_path / "idx_snot")
     write_text_index(docs, path, n_buckets=8)
-    apidx, _l, nb = read_text_index(spark, path)
+    apidx, _l, nb = read_text_index(spark, path)[:3]
     at = {
         r.doc_id: r.n_spans
         for r in span_not_search(
@@ -2015,13 +1983,13 @@ def test_index_scan_memo_invalidated_on_rewrite(spark, tmp_path):
         [(1, "alpha beta gamma"), (2, "beta beta delta")], ["doc_id", "text"]
     )
     write_text_index(docs1, path, n_buckets=4)
-    pidx, lens, nb = read_text_index(spark, path)
+    pidx, lens, nb = read_text_index(spark, path)[:3]
     assert {r.term for r in read_vocab(spark, path).collect()} == {
         "alpha", "beta", "gamma", "delta"
     }
     assert lens.count() == 2
     # second read in the same app returns the memoized frames
-    pidx2, _, _ = read_text_index(spark, path)
+    pidx2, _, _ = read_text_index(spark, path)[:3]
     assert pidx2 is pidx
     # rewrite with different content — reads must reflect it
     docs2 = spark.createDataFrame(
@@ -2029,7 +1997,7 @@ def test_index_scan_memo_invalidated_on_rewrite(spark, tmp_path):
         ["doc_id", "text"],
     )
     write_text_index(docs2, path, n_buckets=4)
-    pidx3, lens3, _ = read_text_index(spark, path)
+    pidx3, lens3, _ = read_text_index(spark, path)[:3]
     assert pidx3 is not pidx
     assert lens3.count() == 3
     assert {r.term for r in read_vocab(spark, path).collect()} == {
